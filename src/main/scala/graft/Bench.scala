@@ -3,50 +3,15 @@ package graft
 /** Driver-run benchmark: every registered query against
   * SPARK_GRAFT_SF_DIR, one JSON line out. Results go through the `noop`
   * sink so the full plan executes (a bare count() would let Catalyst prune
-  * the very columns being benchmarked).
+  * the very columns being benchmarked); see [[Probe.runOnce]].
   */
 object Bench {
-
-  /** Execute one query through the noop sink; returns seconds, or -1 on
-    * failure. Clears the Spark cache afterwards so operators that persist
-    * intermediates (LSH bands, gram index) don't carry cache into the next
-    * measurement — every sample starts cold.
-    */
-  private def timeOnce(
-      spark: org.apache.spark.sql.SparkSession,
-      name: String,
-      fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
-      sfDir: String): Double = {
-    val t0 = System.nanoTime()
-    val failed =
-      try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); false }
-      catch { case e: Throwable =>
-        System.err.println(s"BENCH ERROR $name: ${e.getClass.getName}: ${e.getMessage}")
-        true
-      }
-    val dt = (System.nanoTime() - t0) / 1e9
-    spark.catalog.clearCache()
-    // free the query's shuffle files NOW: ContextCleaner deletes them only
-    // after a driver GC, which a big heap may never do on its own — the
-    // measured r10/r11 mechanism (VarianceProbe, ScaleBench:140) where
-    // lexical-order shuffle-file accumulation inflates every query that
-    // runs after a heavy neighbor by a uniform ~1.2-1.3x. One driver GC
-    // per measurement is milliseconds against the suite's minutes and
-    // removes the cross-query contamination term from the round-over-round
-    // bench diff.
-    System.gc()
-    if (failed) -1.0 else dt
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = graft.core.GraftSession.fromEnv()
     spark.sparkContext.setLogLevel("WARN")
-    // warmup: JIT + parquet footer caches, outside all measured windows
-    SparkEntry.queries.get("q02_knn_exact").foreach { fn =>
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    }
+    Probe.warmUp(spark, sfDir)
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
     val wall0 = System.nanoTime()
     // Two passes, min per query — but INTERLEAVED: pass 1 runs the whole
@@ -56,8 +21,8 @@ object Bench {
     // and five fake 3-10x regressions cost a full clean re-run to debunk.
     // With the passes ~half a suite apart, a load window would have to
     // span the entire run to inflate both samples of one query.
-    val pass1 = ordered.map { case (name, fn) => timeOnce(spark, name, fn, sfDir) }
-    val pass2 = ordered.map { case (name, fn) => timeOnce(spark, name, fn, sfDir) }
+    val pass1 = ordered.map { case (name, fn) => Probe.runOnce(spark, name, fn, sfDir) }
+    val pass2 = ordered.map { case (name, fn) => Probe.runOnce(spark, name, fn, sfDir) }
     val wall = (System.nanoTime() - wall0) / 1e9
     val results = ordered.zip(pass1.zip(pass2)).map { case ((name, _), (a, b)) =>
       // a failed query must be distinguishable from a fast success

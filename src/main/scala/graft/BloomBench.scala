@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Bloom
@@ -25,11 +24,7 @@ object BloomBench {
     spark.sparkContext.setLogLevel("WARN")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
 
-    @volatile var shuffleBytes = 0L
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        shuffleBytes += sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
-    })
+    val probe = Probe.Listener.attach(spark)
 
     val base = graft.core.Tables.lineitem(spark, sfDir)
       .select(col("l_orderkey").as("key"), col("l_quantity"),
@@ -42,13 +37,11 @@ object BloomBench {
     val nDim = dim.count()
 
     def measure(label: String)(f: => Long): Unit = {
-      val t = (1 to 2).map { _ =>
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }.min
-      Thread.sleep(2000)
-      shuffleBytes = 0L
-      f
-      Thread.sleep(2000)
+      val runs = (1 to 2).map { _ =>
+        probe.measure { val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9 }
+      }
+      val t = runs.map(_.value).min
+      val shuffleBytes = runs.last.totals.shuffleWriteBytes
       println(f"[bloom] $label%-30s $t%6.2f s  shuffle ${shuffleBytes / 1024.0 / 1024.0}%10.2f MiB")
     }
 

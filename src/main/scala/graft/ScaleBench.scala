@@ -196,19 +196,10 @@ object ScaleBench {
     // output" is now a number in the row, not prose adjudication
     def allowed(outRatio: Double): Double = math.max(factor.toDouble, outRatio)
     val flagged = rows.filter(r => r._4 > allowed(r._7) * 1.3).map(_._1)
-    // escaped like CdcGearScale's writer: interpolated paths must not be
-    // able to break the committed artifact's JSON (ADVICE r12)
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
     val json = new StringBuilder()
     json.append("{\"factor\":").append(factor)
-      .append(",\"base_dir\":").append(jstr(base))
-      .append(",\"scaled_dir\":").append(jstr(scaled))
+      .append(",\"base_dir\":").append(Probe.jstr(base))
+      .append(",\"scaled_dir\":").append(Probe.jstr(scaled))
       .append(",\"generated_fixture\":").append(generated)
       .append(",\"reps\":").append(reps)
       .append(",\"queries\":{")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Sketch
@@ -14,7 +13,7 @@ import graft.operators.Sketch
   * HLL:
   *
   *   - wall time (min of 2, one JIT/GC-noisy pass can't masquerade)
-  *   - total shuffle WRITE bytes (SparkListener stage metrics) — the
+  *   - total shuffle WRITE bytes ([[Probe.Listener]] task metrics) — the
   *     number that becomes the 100 TB bottleneck: exact distinct
   *     shuffles one record per distinct (group, value) pair per mapper,
   *     the sketches shuffle at most (groups × buckets) rows per mapper
@@ -32,11 +31,7 @@ object SketchBench {
     val spark = graft.core.GraftSession.fromEnv()
     spark.sparkContext.setLogLevel("WARN")
 
-    @volatile var shuffleBytes = 0L
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        shuffleBytes += sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
-    })
+    val probe = Probe.Listener.attach(spark)
 
     // realistic value width: "token-<n>" strings, id-derived (no RNG)
     val df = spark.range(rows).select(
@@ -45,13 +40,11 @@ object SketchBench {
         lit(distinct))).as("v"))          // id*mult < 2^63 at any sane rows
 
     def measure(label: String)(f: => Long): Unit = {
-      val t = (1 to 2).map { _ =>
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }.min
-      Thread.sleep(2000) // listener bus drains async
-      shuffleBytes = 0L
-      f
-      Thread.sleep(2000)
+      val runs = (1 to 2).map { _ =>
+        probe.measure { val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9 }
+      }
+      val t = runs.map(_.value).min
+      val shuffleBytes = runs.last.totals.shuffleWriteBytes
       println(f"[sketch] $label%-34s $t%6.2f s  shuffle ${shuffleBytes / 1024.0 / 1024.0}%10.2f MiB")
     }
 

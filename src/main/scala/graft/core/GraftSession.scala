@@ -48,12 +48,6 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
         (shufflePartitions * initialShuffleFactor).toString)
-      // r16 experiment knobs (defaults = Spark defaults / current behavior);
-      // see OPTIMIZATION_r16.md for the measured A/B before any default moves
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_BYTES", "67108864"))
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir", warehouseDir)
 

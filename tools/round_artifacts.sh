@@ -2,7 +2,7 @@
 # Regenerate the committed per-round evidence artifacts (run in tmux —
 # the whole chain is ~2h; see memory note "graft-long-runs"):
 #   correctness mirrors at sf0.001/0.01/0.1 (tools/check.py --jsonOut
-#   shape), the full per-query bench mirror (graft.BenchLocal), and the
+#   shape), the full per-query bench mirror (graft.Probe mirror), and the
 #   10x scale sweep (graft.ScaleBench -> SCALE.json).
 # Usage: tools/round_artifacts.sh r14
 set -u
@@ -21,9 +21,10 @@ for sf in 0.001 0.01 0.1; do
   echo "CHECK_SF${sf}=$? $(date)" >> "$log"
 done
 SPARK_DRIVER_MEM=32g sbt -batch \
-  "runMain graft.BenchLocal /root/testdata/sf0.1 BENCH_local_${R}.json" \
+  "runMain graft.Probe mirror /root/testdata/sf0.1" \
   > /tmp/${R}_bench.log 2>&1
-echo "BENCHLOCAL=$? $(date)" >> "$log"
+echo "MIRROR=$? $(date)" >> "$log"
+grep -o '{"metric".*' /tmp/${R}_bench.log > "BENCH_local_${R}.json"
 SPARK_DRIVER_MEM=32g sbt -batch "runMain graft.ScaleBench" \
   > /tmp/${R}_sweep.log 2>&1
 echo "SWEEP=$? $(date)" >> "$log"
