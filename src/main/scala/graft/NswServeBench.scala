@@ -48,7 +48,8 @@ object NswServeBench {
       col("embedding").as("vector"),
       map(lit("label"), col("label").cast("string")).as("metadata"),
       lit(1L).as("ts")))
-    store.compact() // serving steady state: compacted = one snapshot scan
+    store.compact() // serving steady state: no WAL batch past the snapshot,
+                    // so `compacted` is one snapshot scan with no shuffle
 
     val queries: Array[Array[Double]] = emb.where(col("vec_id") < nQueries)
       .orderBy("vec_id").select("embedding").collect()

@@ -1,5 +1,7 @@
 package graft.core
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
 /** Core row types and constants of the engine.
@@ -54,4 +56,11 @@ object Schemas {
     StructField("vector", ArrayType(FloatType)),
     StructField("metadata", MapType(StringType, StringType)),
     StructField("ts", LongType)))
+
+  /** `df` reduced to `schema`'s columns, in its order, each cast to its
+    * declared type — what an artifact writer emits so that the reader's
+    * declared schema matches the files.
+    */
+  def conform(df: DataFrame, schema: StructType): DataFrame =
+    df.select(schema.fields.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
 }

@@ -4,6 +4,8 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType,
+  MapType, StringType, StructField, StructType}
 
 /** Partition-local navigable-small-world (NSW) graph index — the Spark
   * re-expression of the reference's actual index structure: each datanode
@@ -577,6 +579,17 @@ object Nsw {
     writeMeta(spark, path, IndexMeta(numPartitions, m, efConstruction))
   }
 
+  /** Rows of a [[buildIndexKeyed]] artifact as written (`pid` is the
+    * partition column) — the declared read schema, so a serve infers
+    * nothing from the files.
+    */
+  def keyedIndexSchema(keyCol: String): StructType = StructType(Seq(
+    StructField("idx", IntegerType), StructField(keyCol, StringType),
+    StructField("vec", ArrayType(DoubleType)),
+    StructField("nbrs", ArrayType(IntegerType)),
+    StructField("metadata", MapType(StringType, StringType)),
+    StructField("ts", LongType), StructField("pid", IntegerType)))
+
   /** Serve a query batch from a [[buildIndexKeyed]] artifact. The
     * metadata equality `filter` is evaluated against the INDEXED metadata
     * and applied inside the beam (disallowed nodes are traversed, never
@@ -594,10 +607,9 @@ object Nsw {
     import spark.implicits._
     val qb = spark.sparkContext.broadcast(queries.sortBy(_._1))
     val fb = spark.sparkContext.broadcast(filter)
-    val perPart = spark.read.parquet(path)
-      .select(col("pid").cast("int"), col("idx").cast("int"),
-        col(keyCol).cast("string"), col("vec"), col("nbrs"),
-        col("metadata"), col("ts").cast("long"))
+    val perPart = spark.read.schema(keyedIndexSchema(keyCol)).parquet(path)
+      .select(col("pid"), col("idx"), col(keyCol), col("vec"), col("nbrs"),
+        col("metadata"), col("ts"))
       .as[(Int, Int, String, Array[Double], Array[Int],
         Map[String, String], Long)]
       .repartition(col("pid"))
@@ -650,11 +662,10 @@ object Nsw {
         pmod(hash(col(keyCol)), lit(meta.numPartitions)).cast("int"))
     val touched = fresh.select("pid").distinct().collect().map(_.getInt(0))
     if (touched.isEmpty) return
-    val existing = spark.read.parquet(path)
+    val existing = spark.read.schema(keyedIndexSchema(keyCol)).parquet(path)
       .where(col("pid").isin(touched.map(Int.box): _*))
-      .select(col("pid").cast("int"), col("idx").cast("int"),
-        col(keyCol).cast("string"), col("vec"), col("nbrs"),
-        col("metadata"), col("ts").cast("long"))
+      .select(col("pid"), col("idx"), col(keyCol), col("vec"), col("nbrs"),
+        col("metadata"), col("ts"))
     val all = existing.unionByName(fresh.select(col("pid"),
       lit(-1).as("idx"), col(keyCol), col(vecCol).as("vec"),
       lit(null).cast("array<int>").as("nbrs"), col("metadata"), col("ts")))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
 
 import graft.functions.VectorFunctions._
 
@@ -111,13 +112,23 @@ object Pq {
       .write.mode("overwrite").parquet(path)
   }
 
+  /** The [[saveCodebooks]] row shape, declared so a load infers nothing. */
+  val CodebookSchema: StructType = StructType(
+    Seq("m", "c").map(StructField(_, IntegerType)) ++
+      Seq(StructField("word", ArrayType(DoubleType))) ++
+      Seq("num_sub", "num_words", "dim").map(StructField(_, IntegerType)))
+
+  /** One Spark job: the at most numSub × numWords rows are collected and
+    * sorted on the driver (a distributed `orderBy` would add a sampling
+    * job for its range partitioner).
+    */
   def loadCodebooks(spark: SparkSession, path: String): Codebooks = {
-    val rows = spark.read.parquet(path)
-      .orderBy(col("m"), col("c"))
+    val rows = spark.read.schema(CodebookSchema).parquet(path)
       .select("m", "c", "word", "num_sub", "num_words", "dim")
       .collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray,
         r.getInt(3), r.getInt(4), r.getInt(5)))
+      .sortBy(r => (r._1, r._2))
     require(rows.nonEmpty, s"loadCodebooks: no rows at $path")
     // the declared shape must be unanimous (mixed declarations = rows from
     // two different artifacts landed in one directory)

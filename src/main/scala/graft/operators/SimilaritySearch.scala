@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
 
 import graft.functions.VectorFunctions._
 
@@ -50,13 +51,19 @@ object SimilaritySearch {
   }
 
   /** Persist / reload trained centroids (the index artifact — same
-    * lifecycle as a VectorStore snapshot).
+    * lifecycle as a VectorStore snapshot), read back with the declared
+    * [[CentroidSchema]] rather than an inferred one.
     */
   def saveCentroids(centroids: DataFrame, path: String): Unit =
-    centroids.write.mode("overwrite").parquet(path)
+    graft.core.Schemas.conform(centroids, CentroidSchema)
+      .write.mode("overwrite").parquet(path)
 
   def loadCentroids(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    spark.read.schema(CentroidSchema).parquet(path)
+
+  /** (cid, ce): the [[trainCentroids]] shape. */
+  val CentroidSchema: StructType = StructType(Seq(
+    StructField("cid", LongType), StructField("ce", ArrayType(DoubleType))))
 
   /** Rows → nearest-centroid assignment, carrying EVERY input column
     * through plus `cid` — the write-side form: an index build appends the

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.core.{Constants, Schemas}
 import graft.functions.VectorFunctions
@@ -27,13 +28,21 @@ import graft.operators.{Knn, SimilaritySearch}
   *     needed; compaction (`compact()`) IS the index rebuild
   *     (`_rebuild_hnsw_index`, `datanode/handler.py:91-120`).
   *
-  * Scale: `compacted` shuffles once on `key` (the LWW window); at cluster
-  * scale the snapshot would be written bucketed by `key` so recurring
-  * compactions and point lookups co-locate. Dim validation (R8) splits the
-  * batch instead of aborting it, mirroring the reference's per-op reject
-  * (`datanode/handler.py:228-232`).
+  * Invariant: a snapshot holds exactly one row per key (the LWW winner),
+  * because [[compact]] writes [[lwwWinners]] output. So while no WAL batch
+  * follows the snapshot, `compacted` is a filtered snapshot scan with no
+  * shuffle; once a write lands past `wal_pos` it shuffles once on `key`
+  * (the LWW window) until the next compaction. At cluster scale the
+  * snapshot would be written bucketed by `key` so recurring compactions
+  * and point lookups co-locate. Every store-owned artifact is read with
+  * the schema declared next to its writer ([[VectorStore]] companion,
+  * `Nsw`, `Pq`, `SimilaritySearch`), so no read runs a schema-inference
+  * job. Dim validation (R8) splits the batch instead of aborting it,
+  * mirroring the reference's per-op reject (`datanode/handler.py:228-232`).
   */
 class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim) {
+  import VectorStore._
+
   private val walDir      = s"$baseDir/wal"
   private val posFile     = Paths.get(s"$baseDir/wal_pos.txt")
   private val snapDirBase = s"$baseDir/snapshot"
@@ -182,17 +191,36 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
 
   private def emptyOps: DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(walSchema.filter(_.name != "node_id")))
+      SnapshotSchema)
+
+  private def readSnapshot(dir: String): DataFrame =
+    spark.read.schema(SnapshotSchema).parquet(dir)
 
   private def snapshotOps: DataFrame =
-    latestSnapshot.map(spark.read.parquet(_)).getOrElse(emptyOps)
+    latestSnapshot.map(readSnapshot).getOrElse(emptyOps)
 
   /** The live table: snapshot ∪ newer WAL, last-writer-wins, tombstone
-    * winners filtered at read time. One shuffle on `key`.
+    * winners filtered at read time. When no WAL batch follows the
+    * snapshot (`walTip() <= readPos()`, directory names only) it is the
+    * snapshot alone: a snapshot already holds one LWW winner per key, so
+    * the window would change nothing and the read is one scan with no
+    * shuffle. Otherwise the window shuffles once on `key`.
     */
-  def compacted: DataFrame =
-    lwwWinners(snapshotOps, walOps().drop("node_id"))
-      .where(col("op_type") === "PUT")
+  def compacted: DataFrame = {
+    val winners =
+      if (walTip() <= readPos()) snapshotOps
+      else lwwWinners(snapshotOps, walOps().drop("node_id"))
+    liveRows(winners)
+  }
+
+  /** Resolved winners → live rows (tombstone winners dropped). The
+    * tombstone test is wrapped in `coalesce` so it never becomes a parquet
+    * pushed filter: nearly every snapshot row is a PUT, so it would prune
+    * nothing, and pushed next to a `key` predicate it made a point lookup
+    * on a 4000-key snapshot read 156 KB instead of 17 KB.
+    */
+  private def liveRows(winners: DataFrame): DataFrame =
+    winners.where(coalesce(col("op_type") === "PUT", lit(false)))
       .select(col("key"), col("vector"), col("metadata"), col("timestamp").as("ts"))
 
   /** Point lookup (S1): pushes the key predicate into the scans. */
@@ -227,14 +255,11 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
                             // compact sits PAST the pointer — never read
     val snapPos = snapshotPositions.filter(p => p <= seq && p <= trusted)
       .sorted.lastOption
-    val snap = snapPos.map(p => spark.read.parquet(s"${snapDirBase}_$p"))
+    val snap = snapPos.map(p => readSnapshot(s"${snapDirBase}_$p"))
       .getOrElse(emptyOps)
     val delta = walOps(afterSeq = snapPos.getOrElse(-1L))
       .where(col("batch_seq") <= seq).drop("node_id")
-    lwwWinners(snap, delta)
-      .where(col("op_type") === "PUT")
-      .select(col("key"), col("vector"), col("metadata"),
-        col("timestamp").as("ts"))
+    liveRows(lwwWinners(snap, delta))
   }
 
   /** SNAPSHOT DIFF — the CDC delta between two [[scanAsOf]] positions:
@@ -300,18 +325,25 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
 
   private val nswDir = s"$baseDir/nsw_index"
 
-  /** `lastSeq` at the moment the persisted NSW index last EXACTLY mirrored
-    * `compacted` (i.e. right after a full build): every key is indexed
-    * once and live, so serving can skip the per-key newest-version window
-    * AND the liveness semi-join — two shuffles — which is the steady
-    * state of the reference's lifecycle (immutable index between
-    * rebuilds, `src/datanode/handler.py:86-120`). Any store write bumps
-    * `lastSeq` past it and any append may add a second node for a re-put
-    * key, so both invalidate. Driver-side state, sound under the store's
-    * one-writer discipline; a cold reopen conservatively serves the
-    * full-discipline path until the next build.
+  /** tier → `lastSeq` at the moment that tier's persisted index last
+    * EXACTLY mirrored `compacted` (i.e. right after a full build): every
+    * key is indexed once and live, so serving can skip the per-key
+    * newest-version window AND the (key, ts) liveness semi-join — the
+    * steady state of the reference's lifecycle (immutable index between
+    * rebuilds, `src/datanode/handler.py:86-120`). Any store write (put or
+    * delete) bumps `lastSeq` past it and any append may add a second
+    * version of a re-put key, so both invalidate. Driver-side state, sound
+    * under the store's one-writer discipline; a cold reopen conservatively
+    * serves the full-discipline path until the next build.
     */
-  private var nswFreshAtSeq: Option[Long] = None
+  private var builtAtSeq = Map.empty[String, Long]
+
+  private def built(tier: String): Unit = {
+    builtAtSeq += tier -> lastSeq
+    registerArtifact(tier)
+  }
+
+  private def fresh(tier: String): Boolean = builtAtSeq.get(tier).contains(lastSeq)
 
   /** Build + persist the per-partition NSW graphs over the live table —
     * the reference's index rebuild (`_rebuild_hnsw_index`,
@@ -325,8 +357,7 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
       numPartitions: Int = 8): Unit = {
     graft.operators.Nsw.buildIndexKeyed(compacted, "key", "vector", nswDir,
       m, efConstruction, numPartitions)
-    nswFreshAtSeq = Some(lastSeq)
-    registerArtifact("nsw")
+    built("nsw")
   }
 
   /** Incrementally index a NEW batch into the persisted NSW graphs — the
@@ -342,7 +373,6 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
     graft.operators.Nsw.appendToIndexKeyed(
       records.select(col("key"), col("vector"), col("metadata"), col("ts")),
       "key", "vector", nswDir)
-    nswFreshAtSeq = None // a re-put key now has two indexed versions
     registerAppend("nsw", coversSeq)
   }
 
@@ -367,7 +397,7 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
     // of its key, so the newest-version window and the liveness semi-join
     // (two shuffles) are provably no-ops — skip them (spec-pinned
     // bit-identical; plan-pinned shuffle-free in VectorStoreSpec)
-    val live = if (nswFreshAtSeq.contains(lastSeq)) cand else {
+    val live = if (fresh("nsw")) cand else {
       val w = Window.partitionBy(col("key"))
         .orderBy(col("ts").desc, col("score").asc)
       val newest = cand.withColumn("__rn", row_number().over(w))
@@ -399,10 +429,11 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
       SimilaritySearch.saveCentroids(centroids, ivfDir)
       // assignCells carries the full record through — no re-join shuffle
       // to recover vector/metadata/ts
-      requireCid(SimilaritySearch.assignCells(base, "key", "vector", centroids))
+      Schemas.conform(requireCid(SimilaritySearch.assignCells(base, "key",
+          "vector", centroids)), IvfDataSchema)
         .write.partitionBy("cid").mode("overwrite").parquet(ivfDataDir)
     } finally base.unpersist()
-    registerArtifact("ivf")
+    built("ivf")
   }
 
   /** NearestCell yields NULL when every centroid is skipped (NaN distance,
@@ -434,9 +465,9 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
   def appendToIvfIndex(records: DataFrame,
       coversSeq: Option[Long] = None): Unit = {
     val centroids = SimilaritySearch.loadCentroids(spark, ivfDir)
-    requireCid(SimilaritySearch.assignCells(
+    Schemas.conform(requireCid(SimilaritySearch.assignCells(
         records.select(col("key"), col("vector"), col("metadata"), col("ts")),
-        "key", "vector", centroids))
+        "key", "vector", centroids)), IvfDataSchema)
       .write.partitionBy("cid").mode("append").parquet(ivfDataDir)
     registerAppend("ivf", coversSeq)
   }
@@ -452,29 +483,34 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
     * within the probed cells the NEWEST indexed version of a key wins
     * (LWW over the index rows), and keys no longer live in the store are
     * dropped (the `deleted_ids` filter) — both costs scoped to the
-    * probed cells, never the whole index.
+    * probed cells, never the whole index, and both skipped while the
+    * index is exactly as built (no write or append since the build).
     */
   def searchIvf(req: Knn.SearchRequest, nprobe: Int = 1): DataFrame = {
     requireArtifact("ivf")
     val centroids = SimilaritySearch.loadCentroids(spark, ivfDir)
     val probes = SimilaritySearch.probeCells(centroids, req.queryVector, nprobe)
       .collect().map(_.getLong(0))
-    val cells = spark.read.parquet(ivfDataDir)
+    val cells = spark.read.schema(IvfDataSchema).parquet(ivfDataDir)
       .where(col("cid").isin(probes: _*))
-    // duplicate index rows for one (key, ts) (e.g. the same batch appended
-    // twice) collapse to one candidate — ties break to the higher cell id
-    val w = Window.partitionBy(col("key"))
-      .orderBy(col("ts").desc, col("cid").desc)
-    val newest = cells.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1).drop("__rn")
-    // liveness is GLOBAL, on (key, ts): an index row survives only if it
-    // IS the live version. A semi-join on key alone would serve a STALE
-    // vector when a re-put's new version landed in an UNPROBED cell (its
-    // old row would be the newest within the probe) — the reference never
-    // does this: PUT overwrite tombstones the old hnsw id immediately
-    // (`datanode/handler.py:254-256`). Under (key, ts) that old row drops
-    // out and the key is an honest ANN miss until its new cell is probed.
-    val live = newest.join(compacted.select("key", "ts"), Seq("key", "ts"), "left_semi")
+    val live = if (fresh("ivf")) cells else {
+      // duplicate index rows for one (key, ts) (e.g. the same batch
+      // appended twice) collapse to one candidate — ties break to the
+      // higher cell id
+      val w = Window.partitionBy(col("key"))
+        .orderBy(col("ts").desc, col("cid").desc)
+      val newest = cells.withColumn("__rn", row_number().over(w))
+        .where(col("__rn") === 1).drop("__rn")
+      // liveness is GLOBAL, on (key, ts): an index row survives only if
+      // it IS the live version. A semi-join on key alone would serve a
+      // STALE vector when a re-put's new version landed in an UNPROBED
+      // cell (its old row would be the newest within the probe) — the
+      // reference never does this: PUT overwrite tombstones the old hnsw
+      // id immediately (`datanode/handler.py:254-256`). Under (key, ts)
+      // that old row drops out and the key is an honest ANN miss until
+      // its new cell is probed.
+      newest.join(compacted.select("key", "ts"), Seq("key", "ts"), "left_semi")
+    }
     val corpus = Knn.metadataFilter(live, "metadata", req.filter)
     val scored = corpus.select(col("key"),
       VectorFunctions.l2Sq(col("vector"), typedLit(req.queryVector)).as("score"))
@@ -498,10 +534,11 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
     try {
       val cb = graft.operators.Pq.trainCodebooks(base, "vector", numSub, numWords, seed)
       graft.operators.Pq.saveCodebooks(spark, cb, pqDir)
-      graft.operators.Pq.encode(base, "key", "vector", cb)
+      Schemas.conform(graft.operators.Pq.encode(base, "key", "vector", cb),
+          PqDataSchema)
         .write.mode("overwrite").parquet(pqDataDir)
     } finally base.unpersist()
-    registerArtifact("pq")
+    built("pq")
   }
 
   /** ANN search through the persisted PQ index: ADC lookup scan over the
@@ -514,17 +551,20 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
   def searchPq(req: Knn.SearchRequest, rerankFrom: Int = 50): DataFrame = {
     requireArtifact("pq")
     val cb = graft.operators.Pq.loadCodebooks(spark, pqDir)
-    val encoded = spark.read.parquet(pqDataDir)
+    val encoded = spark.read.schema(PqDataSchema).parquet(pqDataDir)
     val corpus = Knn.metadataFilter(compacted, "metadata", req.filter)
     // the metadata filter applies PRE-RANK (SearchRequest surface, like
     // search/searchIvf): rank only codes whose key survives the filter,
     // or nearby-but-filtered rows would eat the whole rerankFrom budget
-    // and matching rows would never surface. The semi-join runs even with
-    // an empty filter: pq_data reflects the build snapshot, and stale
-    // codes for since-deleted keys would otherwise consume rerankFrom
-    // budget only to be dropped by the re-rank join, silently returning
-    // fewer than topK rows while live matches exist.
-    val rankable = encoded.join(corpus.select("key"), Seq("key"), "left_semi")
+    // and matching rows would never surface. Once any write follows the
+    // build the semi-join runs even with an empty filter: stale codes for
+    // since-deleted keys would otherwise consume rerankFrom budget only to
+    // be dropped by the re-rank join, silently returning fewer than topK
+    // rows while live matches exist. Only an unfiltered request against
+    // an index exactly as built skips it.
+    val rankable =
+      if (req.filter.isEmpty && fresh("pq")) encoded
+      else encoded.join(corpus.select("key"), Seq("key"), "left_semi")
     val cand = graft.operators.Pq.adcScores(rankable, "key", cb, req.queryVector)
       .orderBy(col("score").asc, col("key").asc)
       .limit(rerankFrom.max(req.topK))
@@ -549,12 +589,14 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
     * ([[packQueryBits]]) sides, so Hamming distances never see them.
     */
   def buildBqIndex(): Unit = {
-    compacted.select(col("key"),
-        graft.operators.Bq.packBits(col("vector"), dim).as("bits"),
-        col("metadata"), col("ts"))
-      .write.mode("overwrite").parquet(bqDataDir)
-    registerArtifact("bq")
+    packRecords(compacted).write.mode("overwrite").parquet(bqDataDir)
+    built("bq")
   }
+
+  private def packRecords(records: DataFrame): DataFrame =
+    Schemas.conform(records.select(col("key"),
+        graft.operators.Bq.packBits(col("vector"), dim).as("bits"),
+        col("metadata"), col("ts")), BqDataSchema)
 
   /** Incrementally pack a NEW batch into the persisted BQ index — the
     * `add_items` analog, like [[appendToIvfIndex]]: map-only pack +
@@ -564,10 +606,7 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
     */
   def appendToBqIndex(records: DataFrame,
       coversSeq: Option[Long] = None): Unit = {
-    records.select(col("key"),
-        graft.operators.Bq.packBits(col("vector"), dim).as("bits"),
-        col("metadata"), col("ts"))
-      .write.mode("append").parquet(bqDataDir)
+    packRecords(records).write.mode("append").parquet(bqDataDir)
     registerAppend("bq", coversSeq)
   }
 
@@ -582,8 +621,10 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
     * explicitly; [[indexPending]] is the catch-up path whose claim is
     * verified by construction.
     */
-  private def registerAppend(tier: String, coversSeq: Option[Long]): Unit =
+  private def registerAppend(tier: String, coversSeq: Option[Long]): Unit = {
+    builtAtSeq -= tier // a re-put key may now have two indexed versions
     registerArtifact(tier, coversSeq.getOrElse(-1L))
+  }
 
   /** VERIFIED incremental indexing: read the WAL window the tier has NOT
     * yet absorbed (`(coverage, lastSeq]` — partition-directory pruning,
@@ -632,22 +673,24 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
     * [[searchIvf]]: metadata filter pre-rank on the INDEXED metadata,
     * newest indexed version per key wins, liveness GLOBAL on (key, ts) —
     * a stale version of a re-put key is never served and never eats
-    * re-rank budget; threshold applies to the exact re-rank score.
+    * re-rank budget (both skipped while the index is exactly as built);
+    * threshold applies to the exact re-rank score.
     */
   def searchBq(req: Knn.SearchRequest, rerankFrom: Int = 50): DataFrame = {
     require(req.queryVector.length == dim,
       s"searchBq: query dim ${req.queryVector.length} != store dim $dim")
     requireArtifact("bq")
-    val packed = spark.read.parquet(bqDataDir)
-    // newest-version window with a deterministic content tie-break (the
-    // lwwWinners discipline): a key appended twice with equal ts must
-    // resolve the same way on every run, not by partition order
-    val w = Window.partitionBy(col("key"))
-      .orderBy(col("ts").desc, xxhash64(to_json(struct(col("bits")))).desc)
-    val newest = packed.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1).drop("__rn")
-    val live = newest.join(compacted.select("key", "ts"), Seq("key", "ts"),
-      "left_semi")
+    val packed = spark.read.schema(BqDataSchema).parquet(bqDataDir)
+    val live = if (fresh("bq")) packed else {
+      // newest-version window with a deterministic content tie-break (the
+      // lwwWinners discipline): a key appended twice with equal ts must
+      // resolve the same way on every run, not by partition order
+      val w = Window.partitionBy(col("key"))
+        .orderBy(col("ts").desc, xxhash64(to_json(struct(col("bits")))).desc)
+      val newest = packed.withColumn("__rn", row_number().over(w))
+        .where(col("__rn") === 1).drop("__rn")
+      newest.join(compacted.select("key", "ts"), Seq("key", "ts"), "left_semi")
+    }
     val corpus = Knn.metadataFilter(live, "metadata", req.filter)
     val qbits = packQueryBits(req.queryVector)
     val cand = corpus
@@ -869,4 +912,34 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
       Files.delete(d)
     }
   }
+}
+
+/** Read schemas of the store's own artifacts, declared next to their
+  * writers (each writer conforms its rows to them), so reads never infer
+  * a schema from the files. VectorStoreSpec pins each against what Spark
+  * infers from a freshly built artifact.
+  */
+object VectorStore {
+  private val record = Seq(
+    StructField("metadata", MapType(StringType, StringType)),
+    StructField("ts", LongType))
+
+  /** `snapshot_<seq>/`: [[VectorStore.compact]]'s LWW winners, one per key
+    * (the WAL op shape without `node_id`).
+    */
+  val SnapshotSchema: StructType =
+    StructType(Schemas.wal.filter(_.name != "node_id")).add("batch_seq", LongType)
+
+  /** `ivf_data/cid=N/`: the assigned corpus; `cid` is the partition column. */
+  val IvfDataSchema: StructType = StructType(Seq(
+    StructField("key", StringType), StructField("vector", ArrayType(DoubleType))) ++
+    record :+ StructField("cid", IntegerType))
+
+  /** `pq_data/`: one row of PQ codes per key. */
+  val PqDataSchema: StructType = StructType(Seq(
+    StructField("key", StringType), StructField("codes", ArrayType(IntegerType))))
+
+  /** `bq_data/`: sign bits packed 32 per word, with the indexed record. */
+  val BqDataSchema: StructType = StructType(Seq(
+    StructField("key", StringType), StructField("bits", ArrayType(LongType))) ++ record)
 }

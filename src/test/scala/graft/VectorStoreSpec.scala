@@ -2,9 +2,11 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
-import graft.operators.Knn
+import graft.operators.{Knn, Nsw, Pq, SimilaritySearch}
 import graft.store.VectorStore
 
 class VectorStoreSpec extends SparkSpec {
@@ -18,6 +20,16 @@ class VectorStoreSpec extends SparkSpec {
 
   private def batch(rows: (String, Array[Float], Map[String, String], Long)*) =
     rows.toDF("key", "vector", "metadata", "ts")
+
+  private def planOf(df: DataFrame): String = df.queryExecution.executedPlan.toString
+
+  private def pairs(df: DataFrame): Seq[(String, Double)] =
+    df.collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
+
+  private def records(df: DataFrame) = df.orderBy("key").collect().map(r =>
+    (r.getString(0), r.getSeq[Double](1), r.getMap[String, String](2), r.getLong(3))).toSeq
+
+  private lazy val probe = Probe.Listener.attach(spark)
 
   test("put then get round-trips; dim validation rejects bad rows") {
     val store = new VectorStore(spark, tmpDir(), dim = 2)
@@ -351,6 +363,169 @@ class VectorStoreSpec extends SparkSpec {
     val afterWrite = store.searchNsw(req, efSearch = 1 << 20)
       .queryExecution.executedPlan.toString
     assert(afterWrite.contains("Join"), afterWrite)
+  }
+
+  test("IVF/BQ/PQ fresh-index fast path: no window or liveness semi-join, " +
+      "parity with the full discipline") {
+    val dir = tmpDir()
+    val store = new VectorStore(spark, dir, dim = 2)
+    store.put(batch((0 until 12).map(i =>
+      rec(f"k$i%02d", Array(i.toFloat, (i % 3).toFloat), 10, tag = s"t${i % 2}")): _*))
+    store.compact() // steady state: the live table is a snapshot scan
+    store.buildIvfIndex(k = 2)
+    store.buildBqIndex()
+    store.buildPqIndex(numSub = 2, numWords = 4)
+    val req = Knn.SearchRequest(Array(2.0, 1.0), topK = 3)
+    def serve(s: VectorStore): Seq[(String, DataFrame)] = Seq(
+      "ivf" -> s.searchIvf(req, nprobe = 2),
+      "bq" -> s.searchBq(req, rerankFrom = 12),
+      "pq" -> s.searchPq(req, rerankFrom = 12))
+    // fresh builds: every key indexed once and live, so neither the
+    // newest-version window nor the (key, ts) semi-join is in the plan
+    val fresh = serve(store)
+    fresh.foreach { case (t, df) =>
+      val p = planOf(df)
+      assert(!p.contains("Window") && !p.contains("LeftSemi"), s"$t: $p")
+    }
+    // a filtered PQ request keeps its pre-rank semi-join even when fresh
+    val filtered = store.searchPq(req.copy(filter = Map("tag" -> "t0")), rerankFrom = 12)
+    assert(planOf(filtered).contains("LeftSemi"), planOf(filtered))
+    assert(pairs(filtered) === pairs(store.search(req.copy(filter = Map("tag" -> "t0")))))
+    // cold reopen: freshness is driver state, so the full discipline runs
+    // and must give the same answers
+    val reopened = serve(new VectorStore(spark, dir, dim = 2))
+    fresh.zip(reopened).foreach { case ((t, a), (_, b)) =>
+      val p = planOf(b)
+      assert(p.contains("LeftSemi") && (t == "pq" || p.contains("Window")), s"$t: $p")
+      assert(pairs(a) === pairs(b), t)
+      assert(pairs(a) === pairs(store.search(req)), t)
+    }
+    // any store write invalidates every tier's fast path
+    store.put(batch(rec("k00", Array(9f, 9f), 20)))
+    serve(store).foreach { case (t, df) =>
+      assert(planOf(df).contains("LeftSemi"), s"$t: ${planOf(df)}")
+    }
+  }
+
+  test("a delete after an IVF or BQ build, with no append, is never served") {
+    val store = new VectorStore(spark, tmpDir(), dim = 2)
+    store.put(batch((0 until 6).map(i =>
+      rec(s"k$i", Array(i.toFloat, 1f), 10)): _*))
+    store.buildIvfIndex(k = 2)
+    store.buildBqIndex()
+    val req = Knn.SearchRequest(Array(0.0, 1.0), topK = 6)
+    def ivf = pairs(store.searchIvf(req, nprobe = 2))
+    def bq = pairs(store.searchBq(req, rerankFrom = 6))
+    assert(ivf.map(_._1).contains("k0") && bq.map(_._1).contains("k0"))
+    // the delete bumps the store's seq, so both tiers leave the fast path
+    // without any index write
+    store.delete(Seq("k0"), ts = 20)
+    val exact = pairs(store.search(req))
+    assert(!exact.map(_._1).contains("k0"))
+    assert(ivf === exact)
+    assert(bq === exact)
+  }
+
+  test("after compact, the live table is the snapshot alone and equals the " +
+      "window path, with and without tombstone GC and after a cold reopen") {
+    val dir = tmpDir()
+    val store = new VectorStore(spark, dir, dim = 2)
+    store.put(batch(rec("a", Array(1f, 1f), 10), rec("b", Array(2f, 2f), 10),
+      rec("c", Array(3f, 3f), 10, tag = "x")))
+    store.put(batch(rec("b", Array(4f, 4f), 20)))
+    store.delete(Seq("a"), ts = 30)
+    store.delete(Seq("c"), ts = 5) // older tombstone: c stays live
+    val before = records(store.scan)
+    assert(planOf(store.scan).contains("Window"))
+    assert(before.map(_._1) === Seq("b", "c"))
+    store.compact()
+    // scanAsOf always resolves through the window — the reference result
+    assert(planOf(store.scanAsOf(store.currentSeq)).contains("Window"))
+    assert(!planOf(store.scan).contains("Window"), planOf(store.scan))
+    assert(records(store.scan) === before)
+    assert(records(store.scanAsOf(store.currentSeq)) === before)
+    val re = new VectorStore(spark, dir, dim = 2)
+    assert(!planOf(re.scan).contains("Window"))
+    assert(records(re.scan) === before)
+    assert(records(re.scanAsOf(re.currentSeq)) === before)
+    // a GC'd compaction keeps the invariant (one row per key)
+    store.delete(Seq("b"), ts = 40)
+    store.compact(gcTombstonesBefore = Some(35L))
+    assert(!planOf(store.scan).contains("Window"))
+    assert(records(store.scan) === records(store.scanAsOf(store.currentSeq)))
+    assert(records(store.scan).map(_._1) === Seq("c"))
+    val re2 = new VectorStore(spark, dir, dim = 2)
+    assert(records(re2.scan) === records(re2.scanAsOf(re2.currentSeq)))
+  }
+
+  test("steady-state get and search: one stage each, no window, no exchange") {
+    val store = new VectorStore(spark, tmpDir(), dim = 2)
+    store.put(batch((0 until 8).map(i =>
+      rec(s"k$i", Array(i.toFloat, 1f), 10, tag = s"t${i % 2}")): _*))
+    store.delete(Seq("k1"), ts = 20)
+    store.compact()
+    val req = Knn.SearchRequest(Array(0.0, 1.0), topK = 3, filter = Map("tag" -> "t1"))
+    Seq(store.get("k3"), store.search(req)).foreach { df =>
+      val p = planOf(df)
+      assert(!p.contains("Window") && !p.contains("Exchange"), p)
+    }
+    // one stage = one job: no LWW shuffle and no schema-inference job
+    val got = probe.measure(store.get("k3").collect())
+    assert(got.value.map(_.getString(0)).toSeq === Seq("k3"))
+    assert(got.stages.size === 1, got.stages)
+    val found = probe.measure(store.search(req).collect())
+    assert(found.value.map(_.getString(0)).toSeq === Seq("k3", "k5", "k7"))
+    assert(found.stages.size === 1, found.stages)
+    assert(found.totals.shuffleWriteBytes === 0L)
+    assert(store.get("k1").count() === 0)
+  }
+
+  test("a put or delete after compact takes the window path, visible at once") {
+    val store = new VectorStore(spark, tmpDir(), dim = 2)
+    store.put(batch(rec("a", Array(1f, 1f), 10), rec("b", Array(2f, 2f), 10)))
+    store.compact()
+    assert(!planOf(store.get("a")).contains("Window"))
+    store.put(batch(rec("a", Array(7f, 7f), 20)))
+    assert(planOf(store.get("a")).contains("Window"))
+    assert(store.get("a").select("vector").head().getSeq[Double](0) === Seq(7.0, 7.0))
+    store.compact()
+    assert(!planOf(store.get("a")).contains("Window"))
+    assert(store.get("a").select("vector").head().getSeq[Double](0) === Seq(7.0, 7.0))
+    store.delete(Seq("b"), ts = 30)
+    assert(planOf(store.scan).contains("Window"))
+    assert(store.get("b").count() === 0)
+    assert(store.scan.select("key").collect().map(_.getString(0)).toSeq === Seq("a"))
+  }
+
+  test("declared artifact read schemas match what every writer puts on disk") {
+    val dir = tmpDir()
+    val store = new VectorStore(spark, dir, dim = 4)
+    store.put(batch((0 until 8).map(i =>
+      rec(s"k$i", Array(i.toFloat, 1f, (i % 3).toFloat, -1f), 10)): _*))
+    store.compact()
+    store.buildNswIndex(m = 4, efConstruction = 16, numPartitions = 2)
+    store.buildIvfIndex(k = 2)
+    store.buildPqIndex(numSub = 2, numWords = 4)
+    store.buildBqIndex()
+    // appends take caller frames (float vectors here): the files they add
+    // must agree with the build's, or a merged read would fail below
+    val more = batch(rec("k9", Array(2f, 2f, 2f, 2f), 20))
+    store.put(more)
+    store.appendToNswIndex(more)
+    store.appendToIvfIndex(more)
+    store.appendToBqIndex(more)
+    val pos = new String(Files.readAllBytes(Paths.get(s"$dir/wal_pos.txt"))).trim
+    def types(s: StructType) = s.fields.map(f => f.name -> f.dataType.catalogString).toMap
+    Seq(s"snapshot_$pos" -> VectorStore.SnapshotSchema,
+        "nsw_index" -> Nsw.keyedIndexSchema("key"),
+        "ivf_centroids" -> SimilaritySearch.CentroidSchema,
+        "ivf_data" -> VectorStore.IvfDataSchema,
+        "pq_codebooks" -> Pq.CodebookSchema,
+        "pq_data" -> VectorStore.PqDataSchema,
+        "bq_data" -> VectorStore.BqDataSchema).foreach { case (sub, declared) =>
+      val onDisk = spark.read.option("mergeSchema", "true").parquet(s"$dir/$sub").schema
+      assert(types(onDisk) === types(declared), sub)
+    }
   }
 
   test("NSW artifact append: LWW + soft-delete discipline, routing stable") {

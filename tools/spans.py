@@ -1,0 +1,84 @@
+#!/usr/bin/env python3
+"""Summarize the spans of a traced benchmark run.
+
+    python3 tools/spans.py [--workload serve] [--phase loop] [--json] [PATH]
+
+PATH defaults to .bench_build/work/<workload>/spans.jsonl under the
+repository root: the file `perfbench/run.py --workload <workload>
+--trace 1` writes, one JSON span per line. For each call kind
+(`layer.name`) and phase (setup, warmup, loop, after) it prints the
+number of spans and the median wall time, jobs, stages, tasks, shuffle
+bytes and input bytes, as a table or, with --json, as one JSON object.
+`shuffle_bytes` is the shuffle write side, the figure the benchmark
+reports as `store.<call>.shuffle_bytes`.
+"""
+import argparse
+import json
+import os
+import statistics
+import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PHASES = ["setup", "warmup", "loop", "after"]
+FIELDS = [("p50_ms", None), ("jobs", "jobs"), ("stages", "stages"),
+          ("tasks", "tasks"), ("shuffle_bytes", "shuffle_write_bytes"),
+          ("input_bytes", "input_bytes")]
+
+
+def load(path):
+    with open(path) as fh:
+        spans = [json.loads(line) for line in fh if line.strip()]
+    # a span still open when the run ended has end_ns 0: no figures
+    return [s for s in spans if s["end_ns"] > 0]
+
+
+def summarize(spans, phase=None):
+    groups = {}
+    for s in spans:
+        if phase is None or s["phase"] == phase:
+            groups.setdefault((f"{s['layer']}.{s['name']}", s["phase"]), []).append(s)
+    order = {p: i for i, p in enumerate(PHASES)}
+    rows = []
+    for (call, ph), ss in sorted(groups.items(),
+                                 key=lambda kv: (order.get(kv[0][1], len(PHASES)),
+                                                 kv[0][1], kv[0][0])):
+        row = {"call": call, "phase": ph, "n": len(ss)}
+        for name, key in FIELDS:
+            vals = [(s["end_ns"] - s["start_ns"]) / 1e6 if key is None else s[key]
+                    for s in ss]
+            row[name] = statistics.median(vals)
+        rows.append(row)
+    return rows
+
+
+def table(rows):
+    head = ["call", "phase", "n"] + [name for name, _ in FIELDS]
+    def num(v):
+        return f"{v:.1f}".rstrip("0").rstrip(".")
+    cells = [[r["call"], r["phase"], str(r["n"]), f"{r['p50_ms']:.0f}"] +
+             [num(r[name]) for name, _ in FIELDS[1:]] for r in rows]
+    widths = [max(len(x) for x in col) for col in zip(head, *cells)]
+    lines = ["| " + " | ".join(h.ljust(w) for h, w in zip(head, widths)) + " |",
+             "|" + "|".join("-" * (w + 2) for w in widths) + "|"]
+    lines += ["| " + " | ".join(c.ljust(w) for c, w in zip(row, widths)) + " |"
+              for row in cells]
+    return "\n".join(lines)
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("path", nargs="?", help="spans.jsonl of a traced run")
+    ap.add_argument("--workload", default="serve",
+                    help="workload whose default spans file to read (default serve)")
+    ap.add_argument("--phase", choices=PHASES, help="keep only spans of this phase")
+    ap.add_argument("--json", action="store_true", help="print JSON instead of a table")
+    a = ap.parse_args()
+    path = a.path or os.path.join(ROOT, ".bench_build", "work", a.workload, "spans.jsonl")
+    if not os.path.exists(path):
+        sys.exit(f"spans.py: no spans at {path} (run perfbench/run.py with --trace 1)")
+    rows = summarize(load(path), a.phase)
+    print(json.dumps({"spans": path, "calls": rows}) if a.json else table(rows))
+
+
+if __name__ == "__main__":
+    main()
