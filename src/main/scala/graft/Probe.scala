@@ -4,7 +4,7 @@ import scala.collection.mutable
 
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
-  SparkListenerStageCompleted, SparkListenerTaskEnd}
+  SparkListenerJobEnd, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
@@ -33,11 +33,11 @@ import org.apache.spark.sql.graftbridge.ListenerBridge
 object Probe {
   type Query = (SparkSession, String) => DataFrame
 
-  /** Executor task-metric sums over one measured window. */
+  /** Executor task-metric sums over one measured window, and its job count. */
   final case class Totals(taskMs: Long = 0L, cpuNs: Long = 0L, gcMs: Long = 0L,
       fetchWaitMs: Long = 0L, inputBytes: Long = 0L, shuffleReadBytes: Long = 0L,
       shuffleWriteBytes: Long = 0L, spillBytes: Long = 0L, tasks: Long = 0L,
-      maxTaskMs: Long = 0L)
+      maxTaskMs: Long = 0L, jobs: Long = 0L)
 
   final case class StageRow(id: Int, name: String, tasks: Int, taskMs: Long,
       inputBytes: Long, inputRecords: Long, shuffleReadBytes: Long,
@@ -73,6 +73,10 @@ object Probe {
         spillBytes = totals.spillBytes + m.diskBytesSpilled,
         tasks = totals.tasks + 1,
         maxTaskMs = math.max(totals.maxTaskMs, m.executorRunTime))
+    }
+
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+      if (open) totals = totals.copy(jobs = totals.jobs + 1)
     }
 
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {

@@ -25,8 +25,9 @@ import graft.functions.VectorFunctions._
   *
   * Encode/score are deterministic given the codebooks (argmin tie breaks
   * to the lowest code via first-match `array_position`), so the
-  * deterministic-codebook variant is oracle-checkable; k-means training
-  * is model-dependent like every index build (same contract as
+  * deterministic-codebook variant is oracle-checkable; trained codebooks
+  * are deterministic given the data and seed but depend on the trainer,
+  * so their outputs are recall-reported (same contract as
   * [[SimilaritySearch.trainCentroids]]).
   */
 object Pq {
@@ -68,31 +69,25 @@ object Pq {
     Codebooks(numSub, numWords, dim, words)
   }
 
-  /** K-means-trained codebooks (fixed seed): one MLlib fit per subspace
-    * over that subspace's slice of the corpus — the real index build.
+  /** K-means-trained codebooks: ONE bounded sample of the corpus (at most
+    * [[SampledKMeans.PointsPerCentroid]] × `numWords` vectors, one Spark
+    * job), then a driver-side [[SampledKMeans.train]] per subspace over
+    * that sample's m-th slices, seeded `seed + m`. Always M×K: a subspace
+    * with fewer distinct slices than words repeats a codeword, which
+    * encode never picks (argmin ties go to the lowest code).
     */
   def trainCodebooks(df: DataFrame, vecCol: String, numSub: Int,
       numWords: Int, seed: Long = 42L): Codebooks = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val first = df.select(size(col(vecCol))).head().getInt(0)
-    val sub = first / numSub
-    require(first % numSub == 0, s"dim $first not divisible into $numSub subspaces")
-    val words = (0 until numSub).map { m =>
-      val data = df.select(array_to_vector(
-        slice(col(vecCol).cast("array<double>"), m * sub + 1, sub)).as("features"))
-      val centers = new KMeans().setK(numWords).setSeed(seed + m).setMaxIter(20)
-        .setFeaturesCol("features").setPredictionCol("c")
-        .fit(data).clusterCenters.map(_.toArray)
-      // KMeans returns FEWER than k centers when the subspace has fewer
-      // distinct points; pad with duplicates — a duplicate codeword is
-      // never chosen (encode argmin ties to the lowest code), it only
-      // keeps the M×K shape rectangular
-      if (centers.length < numWords)
-        centers ++ Array.fill(numWords - centers.length)(centers.last)
-      else centers
-    }.toArray
-    Codebooks(numSub, numWords, first, words)
+    val points = SampledKMeans.sample(df, vecCol,
+      SampledKMeans.PointsPerCentroid * numWords, seed)
+    val dim = points.head.length
+    require(dim % numSub == 0, s"dim $dim not divisible into $numSub subspaces")
+    val sub = dim / numSub
+    val words = Array.tabulate(numSub) { m =>
+      SampledKMeans.train(points.map(_.slice(m * sub, (m + 1) * sub)),
+        numWords, seed + m)
+    }
+    Codebooks(numSub, numWords, dim, words)
   }
 
   /** Persist / reload codebooks (parquet rows (m, c, word) — the same
@@ -179,12 +174,7 @@ object Pq {
   private[operators] def adcTable(cb: Codebooks, query: Array[Double]): Array[Array[Double]] = {
     require(query.length == cb.dim, s"query dim ${query.length} != codebook dim ${cb.dim}")
     Array.tabulate(cb.numSub, cb.numWords) { (m, c) =>
-      val q = query.slice(m * cb.subDim, (m + 1) * cb.subDim)
-      val w = cb.words(m)(c)
-      var acc = 0.0
-      var i = 0
-      while (i < q.length) { val d = q(i) - w(i); acc += d * d; i += 1 }
-      acc
+      SampledKMeans.l2Sq(query.slice(m * cb.subDim, (m + 1) * cb.subDim), cb.words(m)(c))
     }
   }
 

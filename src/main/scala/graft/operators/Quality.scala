@@ -153,49 +153,58 @@ object Quality {
     * equal-hash run, mark duplicated occurrences by sorted-neighbour
     * equality, island-fold their re-sorted positions into the union
     * coverage. Interpreted lambdas — keep the native form in pipelines.
+    *
+    * The sorted pairs are built ONCE per row and bound to a lambda
+    * variable (a one-element `transform`): a Column expression referenced
+    * inside a lambda is re-evaluated at every reference, so each
+    * `element_at(pairs, i)` would otherwise re-hash and re-sort the whole
+    * document for every i.
     */
   def repetitionStatsFold(toks: Column, n: Int): Column = {
     // null-input contract aligned with the native expression: null
     // tokens array → null struct (UnaryExpression propagation), and a
     // null ELEMENT is skipped by concat_ws inside overlappingGrams —
     // both pinned in QualitySpec
-    val pairs = array_sort(transform(overlappingGrams(toks, n), (g, i) =>
+    val sortedPairs = array_sort(transform(overlappingGrams(toks, n), (g, i) =>
       struct(md5Low60(g).as("gh"), i.as("pos"))))
-    val m = size(pairs)
-    val topCnt = aggregate(pairs,
-      struct(lit(0L).as("prev"), lit(false).as("has"),
-        lit(0L).as("run"), lit(0L).as("best")),
-      (acc, x) => {
-        val run = when(acc.getField("has") &&
-            acc.getField("prev") === x.getField("gh"),
-          acc.getField("run") + 1L).otherwise(lit(1L))
-        struct(x.getField("gh").as("prev"), lit(true).as("has"),
-          run.as("run"), greatest(acc.getField("best"), run).as("best"))
-      },
-      acc => acc.getField("best"))
-    // element_at neighbours are branch-guarded: the out-of-range index
-    // is never evaluated (If is lazy)
-    val dupPos = array_sort(
-      when(m === 0, array().cast("array<int>")).otherwise(
-        filter(transform(sequence(lit(1), m), i => {
-          val cur = element_at(pairs, i)
-          val prevEq = when(i > 1,
-            element_at(pairs, i - 1).getField("gh") === cur.getField("gh"))
-            .otherwise(lit(false))
-          val nextEq = when(i < m,
-            element_at(pairs, i + 1).getField("gh") === cur.getField("gh"))
-            .otherwise(lit(false))
-          when(prevEq || nextEq, cur.getField("pos")).otherwise(lit(-1))
-        }), x => x >= 0)))
-    val cov = aggregate(dupPos,
-      struct(lit(0L).as("rm"), lit(-1).as("me")),
-      (acc, pp) => struct(
-        (acc.getField("rm") + greatest(lit(0),
-          (pp + lit(n)) - greatest(acc.getField("me"), pp)).cast("long"))
-          .as("rm"),
-        greatest(acc.getField("me"), pp + lit(n)).as("me")),
-      acc => acc.getField("rm"))
-    when(toks.isNotNull, struct(topCnt.as("top_cnt"), cov.as("dup_cov")))
+    def stats(pairs: Column): Column = {
+      val m = size(pairs)
+      val topCnt = aggregate(pairs,
+        struct(lit(0L).as("prev"), lit(false).as("has"),
+          lit(0L).as("run"), lit(0L).as("best")),
+        (acc, x) => {
+          val run = when(acc.getField("has") &&
+              acc.getField("prev") === x.getField("gh"),
+            acc.getField("run") + 1L).otherwise(lit(1L))
+          struct(x.getField("gh").as("prev"), lit(true).as("has"),
+            run.as("run"), greatest(acc.getField("best"), run).as("best"))
+        },
+        acc => acc.getField("best"))
+      // element_at neighbours are branch-guarded: the out-of-range index
+      // is never evaluated (If is lazy)
+      val dupPos = array_sort(
+        when(m === 0, array().cast("array<int>")).otherwise(
+          filter(transform(sequence(lit(1), m), i => {
+            val cur = element_at(pairs, i)
+            val prevEq = when(i > 1,
+              element_at(pairs, i - 1).getField("gh") === cur.getField("gh"))
+              .otherwise(lit(false))
+            val nextEq = when(i < m,
+              element_at(pairs, i + 1).getField("gh") === cur.getField("gh"))
+              .otherwise(lit(false))
+            when(prevEq || nextEq, cur.getField("pos")).otherwise(lit(-1))
+          }), x => x >= 0)))
+      val cov = aggregate(dupPos,
+        struct(lit(0L).as("rm"), lit(-1).as("me")),
+        (acc, pp) => struct(
+          (acc.getField("rm") + greatest(lit(0),
+            (pp + lit(n)) - greatest(acc.getField("me"), pp)).cast("long"))
+            .as("rm"),
+          greatest(acc.getField("me"), pp + lit(n)).as("me")),
+        acc => acc.getField("rm"))
+      struct(topCnt.as("top_cnt"), cov.as("dup_cov"))
+    }
+    when(toks.isNotNull, element_at(transform(array(sortedPairs), p => stats(p)), 1))
   }
 
   private def fails(flag: String): Column =

@@ -30,24 +30,25 @@ object SimilaritySearch {
       .orderBy(col("cos_sim").desc, col(idCol).asc)
       .limit(k)
 
-  /** Train `k` IVF centroids with MLlib KMeans (fixed seed → deterministic
-    * given the data). Output: (cid LONG, ce ARRAY<DOUBLE>) — tiny, meant to
-    * be persisted next to the snapshot ([[saveCentroids]]) and broadcast at
-    * query time, the Spark analog of the reference's self-organizing index
-    * build (`src/datanode/handler.py:86-120`): train once on write/compact,
-    * reuse across queries.
+  /** Train `k` IVF centroids with the driver-side [[SampledKMeans]] (one
+    * Spark job collects a bounded, deterministic sample; k-means++ seeding
+    * from `seed`, then Lloyd). Output: (cid LONG, ce ARRAY<DOUBLE>) — tiny,
+    * meant to be persisted next to the snapshot ([[saveCentroids]]) and
+    * broadcast at query time, the Spark analog of the reference's
+    * self-organizing index build (`src/datanode/handler.py:86-120`):
+    * train once on write/compact, reuse across queries.
     */
   def trainCentroids(df: DataFrame, vecCol: String, k: Int,
-      seed: Long = 42L): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val data = df.select(array_to_vector(col(vecCol).cast("array<double>")).as("features"))
-    val model = new KMeans().setK(k).setSeed(seed).setMaxIter(20)
-      .setFeaturesCol("features").setPredictionCol("cid")
-      .fit(data)
-    val centers = model.clusterCenters.zipWithIndex
-      .map { case (c, i) => (i.toLong, c.toArray) }
-    df.sparkSession.createDataFrame(centers).toDF("cid", "ce")
+      seed: Long = 42L): DataFrame =
+    centroidFrame(df.sparkSession, SampledKMeans.fit(df, vecCol, k, seed))
+
+  /** Driver-held centroids (index = cid) as a [[CentroidSchema]] frame. */
+  def centroidFrame(spark: org.apache.spark.sql.SparkSession,
+      centroids: Array[Array[Double]]): DataFrame = {
+    val rows = centroids.zipWithIndex.map { case (ce, cid) =>
+      org.apache.spark.sql.Row(cid.toLong, ce.toSeq)
+    }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), CentroidSchema)
   }
 
   /** Persist / reload trained centroids (the index artifact — same
@@ -95,6 +96,15 @@ object SimilaritySearch {
         graft.functions.expressions.NearestCell(col(vecCol), col("__cents")))
       .drop("__cents")
   }
+
+  /** [[assignCells]] against driver-held centroids (index = cid): the
+    * centroid array is a literal of the [[centArray]] shape, so the plan
+    * has no broadcast and no centroid job at all.
+    */
+  def assignCellsTo(df: DataFrame, vecCol: String,
+      centroids: Array[Array[Double]]): DataFrame =
+    df.withColumn("cid", graft.functions.expressions.NearestCell(col(vecCol),
+      typedLit(centroids.toSeq.zipWithIndex.map { case (ce, cid) => (cid.toLong, ce.toSeq) })))
 
   /** The one-row (cid asc)-sorted centroid-array frame both argmin forms
     * consume; `ce` normalized to array<double> (distance arithmetic is
@@ -177,6 +187,18 @@ object SimilaritySearch {
       .orderBy(col("d").asc, col("cid").asc)
       .limit(nprobe)
       .select(col("cid").as("qcid"))
+
+  /** [[probeCells]] on the driver over centroids held as arrays (index =
+    * cid): the same (distance, cid) order, with the same left-folded
+    * Double distances, and no Spark job. Centroids whose length differs
+    * from the query's are rejected rather than ranked.
+    */
+  def probeOrder(centroids: Array[Array[Double]], query: Array[Double],
+      nprobe: Int): Array[Long] =
+    centroids.indices
+      .map(cid => (SampledKMeans.l2Sq(centroids(cid), query), cid.toLong))
+      .sorted(Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long))
+      .take(nprobe).map(_._2).toArray
 
   /** IVF search by query VECTOR (no query row in the table) — the store-
     * serving form: assignment on the (possibly pre-filtered) corpus, probe

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
 
 import graft.core.{Constants, Schemas}
 import graft.functions.VectorFunctions
-import graft.operators.{Knn, SimilaritySearch}
+import graft.operators.{Knn, SampledKMeans, SimilaritySearch}
 
 /** Parquet/JSON-backed keyed vector table — the reference's whole datanode
   * storage engine (`src/datanode/handler.py:20-428` + WAL
@@ -296,8 +296,20 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
     finally stream.close()
   }
 
+  /** The driver-side check every search entry runs before planning: a
+    * query of another length than the store's vectors would score NULL
+    * against every row (sorted first, so nothing fails) or fail only
+    * inside a task after a job has launched.
+    */
+  private def requireQueryDim(req: Knn.SearchRequest, entry: String): Unit =
+    require(req.queryVector.length == dim,
+      s"$entry: query dim ${req.queryVector.length} != store dim $dim")
+
   /** KNN over the live table with the full SearchRequest surface. */
-  def search(req: Knn.SearchRequest): DataFrame = Knn.searchStore(compacted, req)
+  def search(req: Knn.SearchRequest): DataFrame = {
+    requireQueryDim(req, "search")
+    Knn.searchStore(compacted, req)
+  }
 
   /** Live (build-per-call) NSW search — the reference's index structure
     * (hnswlib per datanode, `src/datanode/handler.py:46`) over the live
@@ -313,6 +325,7 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
   def searchNswLive(req: Knn.SearchRequest, m: Int = 8,
       efConstruction: Int = 64, efSearch: Int = 64,
       numPartitions: Int = 8): DataFrame = {
+    requireQueryDim(req, "searchNswLive")
     val corpus = Knn.metadataFilter(compacted, "metadata", req.filter)
     val scored = graft.operators.Nsw.nswTopKBatchKeyed(corpus, "key",
         "vector", Seq((0L, req.queryVector)), req.topK, m, efConstruction,
@@ -390,6 +403,7 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
     * (efSearch per partition) is the overfetch budget those drops spend.
     */
   def searchNsw(req: Knn.SearchRequest, efSearch: Int = 64): DataFrame = {
+    requireQueryDim(req, "searchNsw")
     requireArtifact("nsw")
     val cand = graft.operators.Nsw.searchIndexKeyed(spark, nswDir, "key",
       Seq((0L, req.queryVector)), req.topK, efSearch, req.filter)
@@ -414,10 +428,22 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
   private val ivfDir     = s"$baseDir/ivf_centroids"
   private val ivfDataDir = s"$baseDir/ivf_data"
 
+  /** The IVF centroids (index = cid), held from the last build through
+    * this handle or loaded once from `ivf_centroids/`.
+    */
+  private val ivfCentroids = new Held(ivfDir, () => {
+    val rows = SimilaritySearch.loadCentroids(spark, ivfDir).collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
+    require(rows.nonEmpty && rows.map(_._1).toSeq == rows.indices.map(_.toLong),
+      s"corrupt IVF centroids at $ivfDir: cids ${rows.map(_._1).mkString(",")}")
+    rows.map(_._2)
+  })
+
   /** Train + persist the IVF index over the live table — the index build
     * the reference runs at checkpoint time (`_rebuild_hnsw_index`,
-    * `datanode/handler.py:91-120`): centroids as a broadcast-able
-    * artifact, AND the assigned corpus materialized PARTITIONED BY CELL
+    * `datanode/handler.py:91-120`): centroids trained on the driver from
+    * one bounded sample ([[SampledKMeans]]) and kept on this handle, AND
+    * the assigned corpus materialized PARTITIONED BY CELL
     * (`ivf_data/cid=N/`) — the 100-TB layout where a probe is directory-
     * level partition pruning, not a scan+filter. Assignment is the
     * write-side cost, paid here once per build.
@@ -425,13 +451,15 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
   def buildIvfIndex(k: Int = 8, seed: Long = 42L): Unit = {
     val base = compacted.persist()
     try {
-      val centroids = SimilaritySearch.trainCentroids(base, "vector", k, seed)
-      SimilaritySearch.saveCentroids(centroids, ivfDir)
-      // assignCells carries the full record through — no re-join shuffle
-      // to recover vector/metadata/ts
-      Schemas.conform(requireCid(SimilaritySearch.assignCells(base, "key",
+      val centroids = SampledKMeans.fit(base, "vector", k, seed)
+      SimilaritySearch.saveCentroids(
+        SimilaritySearch.centroidFrame(spark, centroids), ivfDir)
+      // the assignment carries the full record through — no re-join
+      // shuffle to recover vector/metadata/ts
+      Schemas.conform(requireCid(SimilaritySearch.assignCellsTo(base,
           "vector", centroids)), IvfDataSchema)
         .write.partitionBy("cid").mode("overwrite").parquet(ivfDataDir)
+      ivfCentroids.hold(centroids)
     } finally base.unpersist()
     built("ivf")
   }
@@ -464,10 +492,9 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
     */
   def appendToIvfIndex(records: DataFrame,
       coversSeq: Option[Long] = None): Unit = {
-    val centroids = SimilaritySearch.loadCentroids(spark, ivfDir)
-    Schemas.conform(requireCid(SimilaritySearch.assignCells(
+    Schemas.conform(requireCid(SimilaritySearch.assignCellsTo(
         records.select(col("key"), col("vector"), col("metadata"), col("ts")),
-        "key", "vector", centroids)), IvfDataSchema)
+        "vector", ivfCentroids.get)), IvfDataSchema)
       .write.partitionBy("cid").mode("append").parquet(ivfDataDir)
     registerAppend("ivf", coversSeq)
   }
@@ -475,7 +502,8 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
   /** ANN search through the persisted IVF index, honoring the full
     * SearchRequest surface: metadata filter pre-rank, threshold
     * post-score, `nprobe` as the recall/reads dial. Probed cell ids are
-    * resolved driver-side (K tiny centroid rows) so the `cid` predicate
+    * ranked on the driver from the handle's centroids
+    * ([[SimilaritySearch.probeOrder]], no job) so the `cid` predicate
     * hits the partitioned layout as PartitionFilters — only the probed
     * cells' files are ever opened (plan-asserted in VectorStoreSpec).
     * Serves the last [[buildIvfIndex]] snapshot plus everything
@@ -487,10 +515,9 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
     * index is exactly as built (no write or append since the build).
     */
   def searchIvf(req: Knn.SearchRequest, nprobe: Int = 1): DataFrame = {
+    requireQueryDim(req, "searchIvf")
     requireArtifact("ivf")
-    val centroids = SimilaritySearch.loadCentroids(spark, ivfDir)
-    val probes = SimilaritySearch.probeCells(centroids, req.queryVector, nprobe)
-      .collect().map(_.getLong(0))
+    val probes = SimilaritySearch.probeOrder(ivfCentroids.get, req.queryVector, nprobe)
     val cells = spark.read.schema(IvfDataSchema).parquet(ivfDataDir)
       .where(col("cid").isin(probes: _*))
     val live = if (fresh("ivf")) cells else {
@@ -522,12 +549,20 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
   private val pqDir     = s"$baseDir/pq_codebooks"
   private val pqDataDir = s"$baseDir/pq_data"
 
+  /** The PQ codebooks, held from the last build through this handle or
+    * loaded once from `pq_codebooks/`.
+    */
+  private val pqCodebooks = new Held(pqDir,
+    () => graft.operators.Pq.loadCodebooks(spark, pqDir))
+
   /** Train + persist the PQ index over the live table: codebooks as the
     * artifact, and the corpus ENCODED to M small codes per key
     * (`pq_data/`) — the RAM-resident representation a 1000-executor
     * cluster scans while full vectors stay on disk for the re-rank only
     * (SCALE.md "PQ / ADC"). Encode is the write-side cost, like IVF
-    * assignment.
+    * assignment. The codebooks are trained on the driver from one bounded
+    * sample ([[graft.operators.Pq.trainCodebooks]]) and kept on this
+    * handle.
     */
   def buildPqIndex(numSub: Int = 8, numWords: Int = 16, seed: Long = 42L): Unit = {
     val base = compacted.persist()
@@ -537,6 +572,7 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
       Schemas.conform(graft.operators.Pq.encode(base, "key", "vector", cb),
           PqDataSchema)
         .write.mode("overwrite").parquet(pqDataDir)
+      pqCodebooks.hold(cb)
     } finally base.unpersist()
     built("pq")
   }
@@ -549,8 +585,9 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
     * table as of the last [[buildPqIndex]], like [[searchIvf]].
     */
   def searchPq(req: Knn.SearchRequest, rerankFrom: Int = 50): DataFrame = {
+    requireQueryDim(req, "searchPq")
     requireArtifact("pq")
-    val cb = graft.operators.Pq.loadCodebooks(spark, pqDir)
+    val cb = pqCodebooks.get
     val encoded = spark.read.schema(PqDataSchema).parquet(pqDataDir)
     val corpus = Knn.metadataFilter(compacted, "metadata", req.filter)
     // the metadata filter applies PRE-RANK (SearchRequest surface, like
@@ -677,8 +714,7 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
     * threshold applies to the exact re-rank score.
     */
   def searchBq(req: Knn.SearchRequest, rerankFrom: Int = 50): DataFrame = {
-    require(req.queryVector.length == dim,
-      s"searchBq: query dim ${req.queryVector.length} != store dim $dim")
+    requireQueryDim(req, "searchBq")
     requireArtifact("bq")
     val packed = spark.read.schema(BqDataSchema).parquet(bqDataDir)
     val live = if (fresh("bq")) packed else {
@@ -813,12 +849,6 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
         " — rebuild or append before serving this snapshot")
   }
 
-  /** Materialize the compaction (checkpoint, S5): write a new snapshot
-    * covering everything up to the current WAL tip, then advance
-    * `wal_pos.txt`. Old snapshots/WAL files stay for time travel; a real
-    * deployment would GC them by retention (reference: 7 days,
-    * `wal_manager.py:23`).
-    */
   /** Max batch_seq from the WAL partition-directory NAMES — no file
     * contents are opened (the whole point of the partitioned layout).
     */
@@ -833,14 +863,6 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
     finally stream.close()
   }
 
-  /** `gcTombstonesBefore`: tombstone RETENTION horizon (event-time) — the
-    * reference's 7-day WAL retention (`wal_manager.py:23`) as an explicit
-    * policy. DELETE winners with timestamp < horizon are dropped from the
-    * new snapshot; the caller thereby asserts no write with an OLDER
-    * event-time will ever arrive (watermark semantics — a put older than
-    * the horizon arriving later WOULD resurrect the key, which is exactly
-    * the trade every retention policy makes). None = keep all tombstones.
-    */
   /** Policy-driven compaction — the reference's automatic cadence
     * (rebuild every 200k puts / checkpoint every 2k,
     * `datanode/handler.py:313-317`) re-expressed as thresholds a caller
@@ -869,6 +891,20 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
     due
   }
 
+  /** Materialize the compaction (checkpoint, S5): write a new snapshot
+    * covering everything up to the current WAL tip, then advance
+    * `wal_pos.txt`. Old snapshots/WAL files stay for time travel; a real
+    * deployment would GC them by retention (reference: 7 days,
+    * `wal_manager.py:23`).
+    *
+    * `gcTombstonesBefore`: tombstone RETENTION horizon (event-time) — the
+    * reference's 7-day WAL retention (`wal_manager.py:23`) as an explicit
+    * policy. DELETE winners with timestamp < horizon are dropped from the
+    * new snapshot; the caller thereby asserts no write with an OLDER
+    * event-time will ever arrive (watermark semantics — a put older than
+    * the horizon arriving later WOULD resurrect the key, which is exactly
+    * the trade every retention policy makes). None = keep all tombstones.
+    */
   def compact(gcTombstonesBefore: Option[Long] = None): Unit = {
     val tip = lastSeq.max(walTip())
     if (tip <= readPos()) return // idempotent: nothing new since the last
@@ -942,4 +978,35 @@ object VectorStore {
   /** `bq_data/`: sign bits packed 32 per word, with the indexed record. */
   val BqDataSchema: StructType = StructType(Seq(
     StructField("key", StringType), StructField("bits", ArrayType(LongType))) ++ record)
+
+  /** A trained artifact held on a store handle, keyed by its files. Every
+    * [[get]] lists the artifact directory (names, sizes, mtimes: no Spark
+    * job) and reloads only when the listing differs from the one taken
+    * when the value was held, e.g. after a rebuild through another handle.
+    * Spark names each part file with a per-write UUID, so a rewrite
+    * always changes the listing. A cold handle loads once.
+    */
+  private final class Held[T](dir: String, load: () => T) {
+    private var value: Option[T] = None
+    private var stamp: Seq[(String, Long, Long)] = Nil
+
+    def hold(v: T): Unit = synchronized { value = Some(v); stamp = listing() }
+
+    def get: T = synchronized {
+      val now = listing()
+      if (value.isEmpty || now != stamp) { value = Some(load()); stamp = now }
+      value.get
+    }
+
+    private def listing(): Seq[(String, Long, Long)] = {
+      val p = Paths.get(dir)
+      if (!Files.isDirectory(p)) return Nil
+      val stream = Files.list(p)
+      try stream.toArray.map(_.asInstanceOf[java.nio.file.Path]).toSeq
+        .map(f => (f.getFileName.toString, Files.size(f),
+          Files.getLastModifiedTime(f).toMillis))
+        .sorted
+      finally stream.close()
+    }
+  }
 }

@@ -127,20 +127,27 @@ class QualitySpec extends SparkSpec {
       "fixture, every width 2..10 (bit parity); multi == single") {
     import graft.functions.TextFunctions.wsTokens
     import graft.functions.expressions.TextHashExpressions
+    val widths = (2 to 10).toSeq
     val docs = Tables(sf0001).withColumn("__toks", wsTokens(col("text")))
-    val multi = TextHashExpressions.repetitionStatsMulti(
-      col("__toks"), (2 to 10).toSeq)
-    (2 to 10).foreach { n =>
-      val diff = docs.select(
-          TextHashExpressions.repetitionStats(col("__toks"), n).as("a"),
-          Quality.repetitionStatsFold(col("__toks"), n).as("b"),
-          multi.getItem(n - 2).as("c"))
-        .where(col("a.top_cnt") =!= col("b.top_cnt") ||
-          col("a.dup_cov") =!= col("b.dup_cov") ||
-          col("a.top_cnt") =!= col("c.top_cnt") ||
-          col("a.dup_cov") =!= col("c.dup_cov"))
-        .count()
-      assert(diff === 0L, s"native vs fold vs multi diverged at n=$n")
+    // ONE projection evaluates each twin once per row and width, and the
+    // rows are compared on the driver: a filter over the three structs
+    // would be pushed below the projection with every reference inlined,
+    // evaluating each twin once per reference
+    val rows = docs.select(
+        TextHashExpressions.repetitionStatsMulti(col("__toks"), widths).as("c") +:
+          widths.flatMap(n => Seq(
+            TextHashExpressions.repetitionStats(col("__toks"), n).as(s"a$n"),
+            Quality.repetitionStatsFold(col("__toks"), n).as(s"b$n"))): _*)
+      .collect()
+    def stats(r: org.apache.spark.sql.Row): Option[(Long, Long)] =
+      Option(r).map(x => (x.getAs[Long]("top_cnt"), x.getAs[Long]("dup_cov")))
+    widths.foreach { n =>
+      val diff = rows.count { r =>
+        val a = stats(r.getAs[org.apache.spark.sql.Row](s"a$n"))
+        a != stats(r.getAs[org.apache.spark.sql.Row](s"b$n")) ||
+          a != stats(r.getSeq[org.apache.spark.sql.Row](0)(n - 2))
+      }
+      assert(diff === 0, s"native vs fold vs multi diverged at n=$n")
     }
   }
 

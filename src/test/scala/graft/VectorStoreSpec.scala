@@ -845,4 +845,109 @@ class VectorStoreSpec extends SparkSpec {
       store.indexPending("pq"))
     assert(noPath.getMessage.contains("buildPqIndex"), noPath.getMessage)
   }
+
+  test("every search tier rejects a query of another length before any job") {
+    val store = new VectorStore(spark, tmpDir(), dim = 4)
+    store.put(batch((0 until 8).map(i =>
+      rec(s"k$i", Array(i.toFloat, 1f, 0f, (i % 2).toFloat), 10)): _*))
+    store.compact()
+    store.buildNswIndex(m = 4, efConstruction = 8, numPartitions = 2)
+    store.buildIvfIndex(k = 2)
+    store.buildPqIndex(numSub = 2, numWords = 2)
+    store.buildBqIndex()
+    val short = Knn.SearchRequest(Array(0.0, 1.0), topK = 3)
+    val tiers: Seq[(String, Knn.SearchRequest => DataFrame)] = Seq(
+      "search" -> (r => store.search(r)),
+      "searchNswLive" -> (r => store.searchNswLive(r)),
+      "searchNsw" -> (r => store.searchNsw(r)),
+      "searchIvf" -> (r => store.searchIvf(r)),
+      "searchPq" -> (r => store.searchPq(r)),
+      "searchBq" -> (r => store.searchBq(r)))
+    tiers.foreach { case (name, run) =>
+      val m = probe.measure(scala.util.Try(run(short).collect()))
+      val e = m.value.failed.get
+      assert(e.isInstanceOf[IllegalArgumentException], s"$name: $e")
+      assert(e.getMessage.contains(s"$name: query dim 2 != store dim 4"), e.getMessage)
+      assert(m.totals.jobs === 0L, s"$name launched ${m.totals.jobs} job(s)")
+      // the right length is served
+      assert(run(short.copy(queryVector = Array(0.0, 1.0, 0.0, 0.0))).collect().nonEmpty, name)
+    }
+  }
+
+  test("steady-state searchIvf is one job and searchPq two; a cold handle " +
+      "loads the trained artifact once") {
+    val dir = tmpDir()
+    val store = new VectorStore(spark, dir, dim = 2)
+    store.put(batch((0 until 24).map(i =>
+      rec(f"k$i%02d", Array((i % 6).toFloat, (i / 6).toFloat), 10)): _*))
+    store.compact()
+    store.buildIvfIndex(k = 3)
+    store.buildPqIndex(numSub = 2, numWords = 4)
+    val req = Knn.SearchRequest(Array(2.0, 1.0), topK = 4)
+    val ivf = probe.measure(store.searchIvf(req, nprobe = 3).collect())
+    assert(ivf.totals.jobs === 1L, ivf.totals)
+    val pq = probe.measure(store.searchPq(req, rerankFrom = 24).collect())
+    assert(pq.totals.jobs === 2L, pq.totals)
+    val exact = pairs(store.search(req))
+    assert(ivf.value.map(r => (r.getString(0), r.getDouble(1))).toSeq === exact)
+    assert(pq.value.map(r => (r.getString(0), r.getDouble(1))).toSeq === exact)
+    // a second handle pays one load job on its first call only
+    val cold = new VectorStore(spark, dir, dim = 2)
+    Seq[VectorStore => DataFrame](_.searchIvf(req, nprobe = 3),
+        _.searchPq(req, rerankFrom = 24)).foreach { run =>
+      val first = probe.measure(run(cold).collect())
+      val second = probe.measure(run(cold).collect())
+      assert(first.totals.jobs === second.totals.jobs + 1, (first.totals, second.totals))
+      assert(pairs(run(cold)) === exact)
+    }
+  }
+
+  test("a rebuild is served with the new centroids and codebooks, through " +
+      "the same handle and through a second one") {
+    val dir = tmpDir()
+    val a = new VectorStore(spark, dir, dim = 2)
+    // three far-apart clusters of 6 keys
+    val centres = Seq((0f, 0f), (100f, 0f), (0f, 100f))
+    a.put(batch((for { (c, ci) <- centres.zipWithIndex; j <- 0 until 6 }
+      yield rec(s"c${ci}_$j", Array(c._1 + j % 3, c._2 + j / 3), 10)): _*))
+    a.compact()
+    val queries = centres.map { case (x, y) =>
+      Knn.SearchRequest(Array(x + 1.0, y + 0.5), topK = 3) }
+    val exact = queries.map(q => pairs(a.search(q)))
+    def ivf(s: VectorStore) = queries.map(q => pairs(s.searchIvf(q, nprobe = 1)))
+    val b = new VectorStore(spark, dir, dim = 2)
+    // three cells: each query's own cluster is its one probed cell
+    a.buildIvfIndex(k = 3)
+    assert(ivf(a) === exact && ivf(b) === exact)
+    // one cell, rebuilt through b: a stale three-centroid probe of cid 1
+    // or 2 would read no files at all
+    b.buildIvfIndex(k = 1)
+    assert(ivf(a) === exact && ivf(b) === exact)
+    // three cells again, through a: b's stale single centroid would probe
+    // cid 0 alone, one cluster of three
+    a.buildIvfIndex(k = 3)
+    assert(ivf(b) === exact && ivf(a) === exact)
+
+    // PQ: ADC candidates (rerankFrom = 3) decide what is served, so the
+    // answer is a function of the codebooks the search used
+    def pq(s: VectorStore) = queries.map(q => pairs(s.searchPq(q, rerankFrom = 3)))
+    def pqExpected = {
+      val cb = Pq.loadCodebooks(spark, s"$dir/pq_codebooks")
+      val codes = spark.read.schema(VectorStore.PqDataSchema).parquet(s"$dir/pq_data")
+      queries.map { q =>
+        val cand = Pq.adcScores(codes, "key", cb, q.queryVector)
+          .orderBy(col("score"), col("key")).limit(3)
+          .collect().map(_.getString(0)).toSet
+        pairs(a.search(q.copy(topK = 18))).filter(p => cand(p._1)).take(q.topK)
+      }
+    }
+    a.buildPqIndex(numSub = 2, numWords = 4)
+    assert(pq(a) === pqExpected && pq(b) === pqExpected)
+    // one-subspace codes would not even line up with the stale
+    // two-subspace codebooks either handle held
+    b.buildPqIndex(numSub = 1, numWords = 2)
+    assert(pq(a) === pqExpected && pq(b) === pqExpected)
+    a.buildPqIndex(numSub = 2, numWords = 2, seed = 7L)
+    assert(pq(b) === pqExpected && pq(a) === pqExpected)
+  }
 }

@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
-"""Summarize the spans of a traced benchmark run.
+"""Summarize the spans of a traced benchmark run, or compare two runs.
 
     python3 tools/spans.py [--workload serve] [--phase loop] [--json] [PATH]
+    python3 tools/spans.py [--phase loop] [--json] A B
 
 PATH defaults to .bench_build/work/<workload>/spans.jsonl under the
 repository root: the file `perfbench/run.py --workload <workload>
@@ -11,6 +12,11 @@ number of spans and the median wall time, jobs, stages, tasks, shuffle
 bytes and input bytes, as a table or, with --json, as one JSON object.
 `shuffle_bytes` is the shuffle write side, the figure the benchmark
 reports as `store.<call>.shuffle_bytes`.
+
+With two paths, A (say the parent's run) and B (the change's), it prints
+one row per call kind and phase found in either run: span counts and
+the median ms, jobs and shuffle bytes as `A -> B`, the before/after
+table of a performance change in one command.
 """
 import argparse
 import json
@@ -23,6 +29,7 @@ PHASES = ["setup", "warmup", "loop", "after"]
 FIELDS = [("p50_ms", None), ("jobs", "jobs"), ("stages", "stages"),
           ("tasks", "tasks"), ("shuffle_bytes", "shuffle_write_bytes"),
           ("input_bytes", "input_bytes")]
+COMPARED = ["n", "p50_ms", "jobs", "shuffle_bytes"]
 
 
 def load(path):
@@ -51,12 +58,33 @@ def summarize(spans, phase=None):
     return rows
 
 
-def table(rows):
-    head = ["call", "phase", "n"] + [name for name, _ in FIELDS]
-    def num(v):
-        return f"{v:.1f}".rstrip("0").rstrip(".")
-    cells = [[r["call"], r["phase"], str(r["n"]), f"{r['p50_ms']:.0f}"] +
-             [num(r[name]) for name, _ in FIELDS[1:]] for r in rows]
+def compare(a_rows, b_rows):
+    """Rows of A and B joined on (call, phase); a side without the call is None."""
+    a = {(r["call"], r["phase"]): r for r in a_rows}
+    b = {(r["call"], r["phase"]): r for r in b_rows}
+    order = {p: i for i, p in enumerate(PHASES)}
+    keys = sorted(set(a) | set(b),
+                  key=lambda k: (order.get(k[1], len(PHASES)), k[1], k[0]))
+    return [{"call": call, "phase": ph,
+             **{f: [side[(call, ph)][f] if (call, ph) in side else None
+                    for side in (a, b)] for f in COMPARED}}
+            for call, ph in keys]
+
+
+def num(v):
+    return f"{v:.1f}".rstrip("0").rstrip(".")
+
+
+def compare_table(rows):
+    def pair(f, ab):
+        return " -> ".join("-" if v is None else
+                           f"{v:.0f}" if f == "p50_ms" else num(v) for v in ab)
+    head = ["call", "phase"] + COMPARED
+    cells = [[r["call"], r["phase"]] + [pair(f, r[f]) for f in COMPARED] for r in rows]
+    return grid(head, cells)
+
+
+def grid(head, cells):
     widths = [max(len(x) for x in col) for col in zip(head, *cells)]
     lines = ["| " + " | ".join(h.ljust(w) for h, w in zip(head, widths)) + " |",
              "|" + "|".join("-" * (w + 2) for w in widths) + "|"]
@@ -65,19 +93,36 @@ def table(rows):
     return "\n".join(lines)
 
 
+def table(rows):
+    head = ["call", "phase", "n"] + [name for name, _ in FIELDS]
+    cells = [[r["call"], r["phase"], str(r["n"]), f"{r['p50_ms']:.0f}"] +
+             [num(r[name]) for name, _ in FIELDS[1:]] for r in rows]
+    return grid(head, cells)
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("path", nargs="?", help="spans.jsonl of a traced run")
+    ap.add_argument("path", nargs="*",
+                    help="spans.jsonl of a traced run; two paths compare A -> B")
     ap.add_argument("--workload", default="serve",
                     help="workload whose default spans file to read (default serve)")
     ap.add_argument("--phase", choices=PHASES, help="keep only spans of this phase")
     ap.add_argument("--json", action="store_true", help="print JSON instead of a table")
     a = ap.parse_args()
-    path = a.path or os.path.join(ROOT, ".bench_build", "work", a.workload, "spans.jsonl")
-    if not os.path.exists(path):
-        sys.exit(f"spans.py: no spans at {path} (run perfbench/run.py with --trace 1)")
-    rows = summarize(load(path), a.phase)
-    print(json.dumps({"spans": path, "calls": rows}) if a.json else table(rows))
+    if len(a.path) > 2:
+        ap.error("at most two paths")
+    paths = a.path or [os.path.join(ROOT, ".bench_build", "work", a.workload, "spans.jsonl")]
+    for path in paths:
+        if not os.path.exists(path):
+            sys.exit(f"spans.py: no spans at {path} (run perfbench/run.py with --trace 1)")
+    runs = [summarize(load(path), a.phase) for path in paths]
+    if len(runs) == 2:
+        rows = compare(*runs)
+        print(json.dumps({"a": paths[0], "b": paths[1], "calls": rows}) if a.json
+              else compare_table(rows))
+    else:
+        print(json.dumps({"spans": paths[0], "calls": runs[0]}) if a.json
+              else table(runs[0]))
 
 
 if __name__ == "__main__":
