@@ -46,6 +46,26 @@ object AnnQuality {
     val trained = SimilaritySearch.loadCentroids(spark, centDir)
     val trained4 = SimilaritySearch.trainCentroids(emb, "embedding", k = 4)
 
+    // the share of `corpus` a trained-cell probe reads, measured: the mean
+    // over `queries` of the rows in their `nprobe` nearest cells. One
+    // nprobe reads very different amounts on balanced and unbalanced
+    // cells, so a trained row's recall is only comparable next to it.
+    def vecs(df: org.apache.spark.sql.DataFrame): Seq[Array[Double]] =
+      df.select(col("embedding").cast("array<double>")).collect()
+        .map(_.getSeq[Double](0).toArray).toSeq
+    def reads(corpus: org.apache.spark.sql.DataFrame,
+        cents: org.apache.spark.sql.DataFrame, queries: Seq[Array[Double]],
+        nprobe: Int): String = {
+      val held = cents.orderBy("cid").collect().map(_.getSeq[Double](1).toArray)
+      val sizes = SimilaritySearch.ivfAssign(corpus, "vec_id", "embedding", cents)
+        .groupBy("cid").count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val n = sizes.values.sum.toDouble
+      val share = queries.map(q => SimilaritySearch.probeOrder(held, q, nprobe)
+        .map(sizes.getOrElse(_, 0L)).sum / n).sum / queries.length
+      f"${share * 100}%.1f%% reads"
+    }
+    val queryVecs = vecs(emb.where(col("vec_id").isin(queryIds: _*)))
+
     val results = Seq(
       recallOf("ivf (8 naive centroids, nprobe=1)", qid =>
         SimilaritySearch.ivfTopK(emb, "vec_id", "embedding",
@@ -56,19 +76,19 @@ object AnnQuality {
       recallOf("ivf (8 naive centroids, nprobe=4)", qid =>
         SimilaritySearch.ivfTopK(emb, "vec_id", "embedding",
           col("vec_id") < 8, qid, k, nprobe = 4).collect().map(_.getLong(0))),
-      recallOf("ivf (8 KMEANS centroids, nprobe=1)", qid =>
+      recallOf(s"ivf (8 KMEANS centroids, nprobe=1, ${reads(emb, trained, queryVecs, 1)})", qid =>
         SimilaritySearch.ivfSearch(emb, "vec_id", "embedding", trained,
           qid, k).collect().map(_.getLong(0))),
-      recallOf("ivf (8 KMEANS centroids, nprobe=2)", qid =>
+      recallOf(s"ivf (8 KMEANS centroids, nprobe=2, ${reads(emb, trained, queryVecs, 2)})", qid =>
         SimilaritySearch.ivfSearch(emb, "vec_id", "embedding", trained,
           qid, k, nprobe = 2).collect().map(_.getLong(0))),
-      recallOf("ivf (8 KMEANS centroids, nprobe=4)", qid =>
+      recallOf(s"ivf (8 KMEANS centroids, nprobe=4, ${reads(emb, trained, queryVecs, 4)})", qid =>
         SimilaritySearch.ivfSearch(emb, "vec_id", "embedding", trained,
           qid, k, nprobe = 4).collect().map(_.getLong(0))),
-      recallOf("ivf (4 KMEANS centroids, nprobe=2)", qid =>
+      recallOf(s"ivf (4 KMEANS centroids, nprobe=2, ${reads(emb, trained4, queryVecs, 2)})", qid =>
         SimilaritySearch.ivfSearch(emb, "vec_id", "embedding", trained4,
           qid, k, nprobe = 2).collect().map(_.getLong(0))),
-      recallOf("ivf (4 KMEANS centroids, nprobe=3)", qid =>
+      recallOf(s"ivf (4 KMEANS centroids, nprobe=3, ${reads(emb, trained4, queryVecs, 3)})", qid =>
         SimilaritySearch.ivfSearch(emb, "vec_id", "embedding", trained4,
           qid, k, nprobe = 3).collect().map(_.getLong(0))),
       recallOf("rp-lsh (6 planes, 1 probe)", qid =>
@@ -137,7 +157,7 @@ object AnnQuality {
         recallOf(s"pq-adc + exact re-rank of top-${10 * k} (~10% reads)", qid =>
           Pq.adcTopK(emb, "vec_id", "embedding", pqCb, qv(qid), k,
             rerankFrom = Some(10 * k)).collect().map(_.getLong(0))),
-        recallOf(s"ivf-pq (8 KMEANS cells nprobe=4, 8x16 pq, re-rank top-${10 * k})", qid =>
+        recallOf(s"ivf-pq (8 KMEANS cells nprobe=4, ${reads(emb, trained, queryVecs, 4)}, 8x16 pq, re-rank top-${10 * k})", qid =>
           Pq.ivfAdcTopK(emb, "vec_id", "embedding", trained, pqCb, qv(qid), k,
             nprobe = 4, rerankFrom = Some(10 * k)).collect().map(_.getLong(0))))
     }
@@ -160,7 +180,7 @@ object AnnQuality {
           trained, nprobe = nprobe)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val hit = exactNn.count { case (id, nn) => got.get(id).contains(nn) }
-      s"neardup-ivf (8 KMEANS cells, nprobe=$nprobe, ~${nprobe * 100 / 8}% reads) top-1 vs quadratic" ->
+      s"neardup-ivf (8 KMEANS cells, nprobe=$nprobe, ${reads(emb, trained, vecs(emb), nprobe)}) top-1 vs quadratic" ->
         hit.toDouble / exactNn.size
     }
 
@@ -183,7 +203,8 @@ object AnnQuality {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val plantedHit = (0L until 50L).count(i => plantedGot.get(i + 10000).contains(i))
     val plantedRow =
-      "neardup-ivf PLANTED dups (nprobe=1, ~12% reads) found" -> plantedHit / 50.0
+      s"neardup-ivf PLANTED dups (nprobe=1, ${reads(withPlanted, plantedCent,
+        vecs(planted), 1)}) found" -> plantedHit / 50.0
 
     val neardupResults = Seq(neardupRecall(1), neardupRecall(2),
       neardupIvfRecall(4), neardupIvfRecall(6), plantedRow)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions.md5Low60
@@ -47,7 +47,7 @@ object SampledKMeans {
     val rows = df.select(col(vecCol).cast("array<double>").as("__v"))
       .observe(obs, count(lit(1)).as("n"), count(when(bad, lit(1))).as("bad"),
         min(size(v)).as("lo"), max(size(v)).as("hi"))
-      .select(v, md5Low60(concat(lit(s"$seed:"), v.cast("string"))).as("__h"))
+      .select(v, sampleKey(v, seed).as("__h"))
       .orderBy(col("__h"), v)
       .limit(cap)
       .collect()
@@ -63,15 +63,20 @@ object SampledKMeans {
     rows.map(_.getSeq[Double](0).toArray)
   }
 
+  /** The hash [[sample]] orders by (ascending, then the vector): md5Low60
+    * of `"<seed>:"` and the array<double> vector as a string.
+    */
+  def sampleKey(v: Column, seed: Long): Column =
+    md5Low60(concat(lit(s"$seed:"), v.cast("array<double>").cast("string")))
+
   /** k-means++ seeding, then Lloyd iterations until no point changes cell
-    * (at most `maxIter`). Always returns exactly `k` centroids: when the
+    * (at most [[MaxIter]]). Always returns exactly `k` centroids: when the
     * points hold fewer than `k` distinct values the surplus seeds repeat
     * the previous one, and a repeated centroid never wins an argmin
     * (ties go to the lowest id), so it only keeps the shape. An emptied
     * cell keeps its previous centroid.
     */
-  def train(points: Array[Array[Double]], k: Int, seed: Long,
-      maxIter: Int = MaxIter): Array[Array[Double]] = {
+  def train(points: Array[Array[Double]], k: Int, seed: Long): Array[Array[Double]] = {
     require(points.nonEmpty, "SampledKMeans.train: no points")
     require(k > 0, s"SampledKMeans.train: k must be positive, got $k")
     val n = points.length
@@ -93,7 +98,7 @@ object SampledKMeans {
     val cell = Array.fill(n)(-1)
     var iter = 0
     var moved = true
-    while (moved && iter < maxIter) {
+    while (moved && iter < MaxIter) {
       moved = false
       var i = 0
       while (i < n) {

@@ -33,10 +33,14 @@ object SimilaritySearch {
   /** Train `k` IVF centroids with the driver-side [[SampledKMeans]] (one
     * Spark job collects a bounded, deterministic sample; k-means++ seeding
     * from `seed`, then Lloyd). Output: (cid LONG, ce ARRAY<DOUBLE>) — tiny,
-    * meant to be persisted next to the snapshot ([[saveCentroids]]) and
-    * broadcast at query time, the Spark analog of the reference's
-    * self-organizing index build (`src/datanode/handler.py:86-120`):
-    * train once on write/compact, reuse across queries.
+    * the frame form for plan-building callers (q35, [[ivfSearch]],
+    * [[Pq.ivfAdcTopK]], the dedup operators), which broadcast it into
+    * [[assignCells]]. The store calls [[SampledKMeans.fit]] directly,
+    * persists the array next to the snapshot ([[saveCentroids]]) and keeps
+    * it on the handle, assigning with [[assignCellsTo]] and ranking probes
+    * with [[probeOrder]]: the Spark analog of the reference's
+    * self-organizing index build (`src/datanode/handler.py:86-120`), train
+    * once on write/compact, reuse across queries.
     */
   def trainCentroids(df: DataFrame, vecCol: String, k: Int,
       seed: Long = 42L): DataFrame =
@@ -91,20 +95,28 @@ object SimilaritySearch {
     // fold it replaces is CodegenFallback and broke the scan's
     // WholeStageCodegen span); [[nearestCellFold]] is its declarative
     // twin, bit-parity-pinned in SimilaritySearchSpec.
-    df.crossJoin(broadcast(centArray(centroids)))
-      .withColumn("cid",
-        graft.functions.expressions.NearestCell(col(vecCol), col("__cents")))
-      .drop("__cents")
+    withNearestCell(df.crossJoin(broadcast(centArray(centroids))), vecCol,
+      col("__cents")).drop("__cents")
   }
 
   /** [[assignCells]] against driver-held centroids (index = cid): the
     * centroid array is a literal of the [[centArray]] shape, so the plan
-    * has no broadcast and no centroid job at all.
+    * has no broadcast and no centroid job at all. Both forms stay because
+    * their centroids live in different places: the store holds trained
+    * arrays on its handle, while [[ivfTopK]]'s centroids are corpus rows
+    * chosen by a predicate inside the plan (q25, oracle-checked), which
+    * the frame form assigns without a driver round trip.
     */
   def assignCellsTo(df: DataFrame, vecCol: String,
       centroids: Array[Array[Double]]): DataFrame =
-    df.withColumn("cid", graft.functions.expressions.NearestCell(col(vecCol),
-      typedLit(centroids.toSeq.zipWithIndex.map { case (ce, cid) => (cid.toLong, ce.toSeq) })))
+    withNearestCell(df, vecCol,
+      typedLit(centroids.toSeq.zipWithIndex.map { case (ce, cid) => (cid.toLong, ce.toSeq) }))
+
+  /** `cid` = the codegen argmin of `vecCol` over a [[centArray]]-shaped
+    * column: the one assignment both forms above share.
+    */
+  private def withNearestCell(df: DataFrame, vecCol: String, cents: Column): DataFrame =
+    df.withColumn("cid", graft.functions.expressions.NearestCell(col(vecCol), cents))
 
   /** The one-row (cid asc)-sorted centroid-array frame both argmin forms
     * consume; `ce` normalized to array<double> (distance arithmetic is
@@ -177,9 +189,12 @@ object SimilaritySearch {
   }
 
   /** The `nprobe` cells a literal query vector probes — one (qcid) row per
-    * probed cell, tie-break (distance, cid). THE definition of probe
-    * order: [[ivfSearchVec]] and [[Pq.ivfAdcTopK]] must rank cells
-    * identically or the tiers drift.
+    * probed cell, tie-break (distance, cid) — over a centroid frame, for
+    * [[ivfSearchVec]] and [[Pq.ivfAdcTopK]], whose centroids may be
+    * corpus rows chosen inside the plan, under any cids. Its driver twin
+    * [[probeOrder]] ranks the store's held centroids without a job; the
+    * two must rank cells identically or the tiers drift, and
+    * SampledKMeansSpec pins them equal, ties included.
     */
   def probeCells(centroids: DataFrame, query: Array[Double], nprobe: Int): DataFrame =
     centroids
@@ -190,8 +205,9 @@ object SimilaritySearch {
 
   /** [[probeCells]] on the driver over centroids held as arrays (index =
     * cid): the same (distance, cid) order, with the same left-folded
-    * Double distances, and no Spark job. Centroids whose length differs
-    * from the query's are rejected rather than ranked.
+    * Double distances, and no Spark job — what lets `searchIvf` run as
+    * one job. Centroids whose length differs from the query's are
+    * rejected rather than ranked.
     */
   def probeOrder(centroids: Array[Array[Double]], query: Array[Double],
       nprobe: Int): Array[Long] =

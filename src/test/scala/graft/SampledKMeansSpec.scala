@@ -86,6 +86,25 @@ class SampledKMeansSpec extends SparkSpec {
     }
   }
 
+  test("a bad row outside the sample still fails the sample") {
+    import org.apache.spark.sql.functions.{col, min, size}
+    val clean = emb.select(col("embedding").cast("array<double>").as("v"))
+    val dim = clean.select(size(col("v"))).head().getInt(0)
+    val lowest = clean.select(min(SampledKMeans.sampleKey(col("v"), 42L))).head().getLong(0)
+    val cases = Seq(
+      "NaN element" -> Array.fill(dim)(0.5).updated(0, Double.NaN),
+      "wrong length" -> Array.fill(dim + 1)(0.5))
+    cases.foreach { case (what, row) =>
+      val bad = vecs(Seq(row))
+      // cap 1 samples the lowest key alone, and the clean corpus holds it
+      val badKey = bad.select(SampledKMeans.sampleKey(col("v"), 42L)).head().getLong(0)
+      assert(badKey > lowest, what)
+      intercept[IllegalArgumentException](
+        SampledKMeans.sample(clean.unionByName(bad), "v", 1, 42L))
+      info(s"$what outside a 1-row sample: rejected")
+    }
+  }
+
   test("driver probe order equals probeCells, ties included") {
     // five cells at distance 1 from the query, one duplicated: a total
     // tie broken by cid alone
