@@ -10,7 +10,8 @@ import graft.queries.CoreQueries
 /** ANN quality report (BASELINE.md: recall is REPORTED, not hash-matched —
   * approximate indexes are model-dependent by nature, like the reference's
   * HNSW). Measures recall@k of each approximate tier against the exact
-  * path over a set of query rows, and writes ANN_QUALITY.md.
+  * path over a set of query rows, and writes the measured tables into
+  * ANN_QUALITY.md between its two marker lines ([[splice]]).
   *
   * Usage: runMain graft.AnnQuality [sfDir] [k] [nQueries]
   */
@@ -210,7 +211,6 @@ object AnnQuality {
       neardupIvfRecall(4), neardupIvfRecall(6), plantedRow)
 
     val md = new StringBuilder
-    md.append("# ANN_QUALITY — recall of approximate tiers vs the exact path\n\n")
     md.append(s"Measured by `graft.AnnQuality` over the first $nq query rows of\n")
     md.append(s"`$sfDir/embeddings.parquet`, k=$k. The exact scan→score→top-k path\n")
     md.append("is the oracle-checked ground truth; these tiers trade recall for\n")
@@ -218,86 +218,40 @@ object AnnQuality {
     md.append("2k, `src/datanode/handler.py:364`) is what the MLlib tier applies.\n\n")
     md.append(s"| tier | mean recall@$k |\n|---|---|\n")
     results.foreach { case (t, r) => md.append(f"| $t | $r%.3f |\n") }
-    // the serving-economics section is measured by graft.NswServeBench,
-    // not here — emit it from this generator so a recall re-run cannot
-    // silently drop it (it once did); re-run NswServeBench to refresh.
-    md.append(servingEconomics)
     md.append("\nEmbedding near-dup (every row's single nearest neighbor — the\n")
     md.append("q20 semantics) via multi-probe LSH candidates + exact re-rank,\n")
     md.append("measured against the quadratic all-pairs ground truth:\n\n")
     md.append("| path | top-1 recall |\n|---|---|\n")
     neardupResults.foreach { case (t, r) => md.append(f"| $t | $r%.3f |\n") }
-    md.append("\nGeometry note: this fixture's embeddings are near-uniform random\n")
-    md.append("directions (median exact-NN cosine ~0.37), so for the all-rows\n")
-    md.append("top-1 task ANY sublinear index has recall ~= its read fraction —\n")
-    md.append("that is information-theoretic, not an implementation gap. The\n")
-    md.append("planted-dup row is the actual dedup workload (true near-dups at\n")
-    md.append("cos ~0.9999): candidate generation finds ALL of them while\n")
-    md.append("reading ~1/K of the corpus, which is the behavior that matters\n")
-    md.append("at 100 TB.\n")
-    val out = "ANN_QUALITY.md"
-    Files.writeString(Paths.get(out), md.toString)
+    val out = Paths.get("ANN_QUALITY.md")
+    Files.writeString(out, splice(Files.readString(out), md.toString))
     println(md.toString)
-    println(s"written: $out")
+    println(s"written: $out (between its markers)")
     spark.stop()
   }
 
-  /** Last `graft.NswServeBench` measurements (see that main to refresh). */
-  private val servingEconomics: String =
-    """
-      |## NSW serving economics (steady state)
-      |
-      |Measured by `graft.NswServeBench` (store ingest → compact →
-      |`buildNswIndex` once → 20 single-query serves, each a separate
-      |action; m=8, efC=64, efSearch=64, 8 partitions, local[32]):
-      |
-      || corpus | build once | artifact serve (`searchNsw`) | rebuild-per-call (`searchNswLive`) | break-even |
-      ||---|---|---|---|---|
-      || sf0.1 embeddings (2 000 × 64d) | 2.35 s | 0.303 s/query | 0.608 s/query | 8 queries |
-      || 16× replicated (32 000 × 64d) | 5.01 s | 0.320 s/query | 2.423 s/query | 3 queries |
-      |
-      |Artifact serve time is FLAT in corpus size (the 0.3 s floor is
-      |local-mode job overhead; the beam itself reads efSearch·degree
-      |nodes) while per-call rebuild grows with per-partition n — the
-      |gap is 2× at 2k rows, 7.6× at 32k, and keeps widening: this is
-      |why the reference builds at checkpoint and serves every query
-      |from the built index (`src/datanode/handler.py:86-120`), and why
-      |`searchNsw`+`buildNswIndex` is the serving path with
-      |`searchNswLive` reserved for ad-hoc one-shots. Serving off a
-      |FRESH index (no writes since build — the steady state between
-      |rebuilds) also skips the newest-version window and the liveness
-      |semi-join entirely (two shuffles, provably no-ops; plan- and
-      |parity-pinned in VectorStoreSpec), which is the 0.65→0.30 s/query
-      |step visible in the serve floor.
-      |
-      |## 2-layer hierarchy experiment: a documented NEGATIVE result
-      |
-      |Measured by `graft.NswHierBench` (one graph, m=8, efC=32, 32
-      |queries, recall@5; "2-layer" builds a small NSW over the SAME √n
-      |stride sample and beams it for layer-0 entries instead of seeding
-      |at all √n samples):
-      |
-      || n | mode | ef=16 recall / evals | ef=64 recall / evals |
-      ||---|---|---|---|
-      || 2 000 | flat √n seeds | 0.638 / 165 | 0.819 / 417 |
-      || 2 000 | 2-layer (efUpper=8) | 0.656 / 162 | 0.806 / 419 |
-      || 20 000 | flat √n seeds | 0.194 / 190 | 0.263 / 302 |
-      || 20 000 | 2-layer (efUpper=4) | 0.169 / 91 | 0.169 / 188 |
-      || 20 000 | 2-layer (efUpper=8) | 0.175 / 119 | 0.206 / 222 |
-      |
-      |The hierarchy does what it promises mechanically — entry evals go
-      |~constant instead of √n (20k: 91 vs 190 at ef=16) — but recall
-      |drops more than the savings buy back: at MATCHED eval budgets
-      |(flat ef=16 @ 190 evals vs 2-layer ef=64/efUpper=4 @ 188) flat
-      |seeding wins 0.194 vs 0.169. Cause: this fixture is near-uniform
-      |random directions, where greedy graph navigation has little
-      |gradient to follow (the same geometry note as the near-dup
-      |section), so the few hierarchy-chosen entries are barely better
-      |than random while the √n spread covers pruning-induced sparse
-      |directed regions. On clusterable corpora (real embeddings) the
-      |hierarchy should fare better, but on the evidence available the
-      |flat multi-restart stays the production seeding; the 2-layer path
-      |remains in `Nsw.Index.searchHier` for re-evaluation against a
-      |structured corpus.
-      |""".stripMargin
+  /** The markers around the part of ANN_QUALITY.md this main writes:
+    * the measured tables. Everything outside them (the notes, and the
+    * sections measured by other mains) is kept as it is.
+    */
+  val BeginMarker =
+    "<!-- AnnQuality:begin (written by graft.AnnQuality; edit outside these markers) -->"
+  val EndMarker = "<!-- AnnQuality:end -->"
+
+  /** `doc` with the text between its begin and end marker lines replaced
+    * by `generated`. Fails when a marker is missing, repeated or out of
+    * order, rather than write a file that lost hand-kept sections.
+    */
+  def splice(doc: String, generated: String): String = {
+    def at(marker: String): Int = {
+      val i = doc.indexOf(marker)
+      require(i >= 0, s"ANN_QUALITY.md has no '$marker' line: put the begin and " +
+        "end markers back around the generated tables")
+      require(doc.indexOf(marker, i + 1) < 0, s"ANN_QUALITY.md has '$marker' twice")
+      i
+    }
+    val (b, e) = (at(BeginMarker), at(EndMarker))
+    require(b < e, "ANN_QUALITY.md has its end marker before its begin marker")
+    doc.substring(0, b + BeginMarker.length) + "\n" + generated + doc.substring(e)
+  }
 }

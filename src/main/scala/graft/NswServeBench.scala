@@ -79,6 +79,7 @@ object NswServeBench {
     println(f"[nsw-serve] artifact_serve mean=${mean(serve)}%.3f s/query")
     println(f"[nsw-serve] live_rebuild  mean=${mean(live)}%.3f s/query")
     println(f"[nsw-serve] break_even=$breakEven queries")
+    store.close()
     spark.stop()
   }
 }

@@ -43,10 +43,12 @@ object Probe {
       inputBytes: Long, inputRecords: Long, shuffleReadBytes: Long,
       shuffleWriteBytes: Long, spillBytes: Long)
 
-  /** What one measured window saw; `plan` is the last SQL execution that
-    * finished inside it. */
+  /** What one measured window saw; `plans` are the SQL executions that
+    * finished inside it, in order, and `plan` is the last of them. */
   final case class Measured[T](value: T, totals: Totals, stages: Seq[StageRow],
-      plan: Option[QueryExecution])
+      plans: Seq[QueryExecution]) {
+    def plan: Option[QueryExecution] = plans.lastOption
+  }
 
   /** The metrics listener. [[measure]] drains the listener bus before and
     * after its body: every task and stage event of a job is posted before
@@ -58,7 +60,7 @@ object Probe {
     private var open = false
     private var totals = Totals()
     private val stages = mutable.ArrayBuffer[StageRow]()
-    private var plan: Option[QueryExecution] = None
+    private val plans = mutable.ArrayBuffer[QueryExecution]()
 
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
       val m = e.taskMetrics
@@ -90,7 +92,7 @@ object Probe {
 
     override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
       case end: SparkListenerSQLExecutionEnd =>
-        synchronized { if (open) plan = Option(ListenerBridge.queryExecution(end)) }
+        synchronized { if (open) plans ++= Option(ListenerBridge.queryExecution(end)) }
       case _ =>
     }
 
@@ -100,8 +102,8 @@ object Probe {
       try {
         val v = body
         ListenerBridge.drain(sc)
-        synchronized { Measured(v, totals, stages.toList, plan) }
-      } finally synchronized { open = false; stages.clear(); plan = None }
+        synchronized { Measured(v, totals, stages.toList, plans.toList) }
+      } finally synchronized { open = false; stages.clear(); plans.clear() }
     }
   }
 

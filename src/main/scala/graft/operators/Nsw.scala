@@ -2,7 +2,8 @@ package graft.operators
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType,
   MapType, StringType, StructField, StructType}
@@ -544,7 +545,7 @@ object Nsw {
 
   /** STRING-keyed [[buildIndex]] for the store tier: artifact rows carry
     * the record's `metadata` and `ts` alongside the graph — (pid, idx,
-    * key, vec, nbrs, metadata, ts) — so [[searchIndexKeyed]] can apply
+    * key, vec, nbrs, metadata, ts) — so [[searchLoaded]] can apply
     * the SearchRequest metadata filter DURING the beam (pre-rank) and the
     * store can enforce LWW/soft-delete on (key, ts) post-merge. Same
     * placement (`repartition(n, col(key))`), same ascending-key insertion
@@ -590,58 +591,96 @@ object Nsw {
     StructField("metadata", MapType(StringType, StringType)),
     StructField("ts", LongType), StructField("pid", IntegerType)))
 
-  /** Serve a query batch from a [[buildIndexKeyed]] artifact. The
-    * metadata equality `filter` is evaluated against the INDEXED metadata
-    * and applied inside the beam (disallowed nodes are traversed, never
-    * collected — see [[Index.search]]), so a full-width beam is
-    * exhaustive-over-allowed: exact filtered search, the oracle hook.
-    * Emits the WHOLE beam per (partition, query) — up to max(efSearch, k)
-    * rows, the store's overfetch budget for dropping stale/deleted
-    * versions after the merge — as (query_id, keyCol, ts, score).
+  /** One build partition's graph of a [[buildIndexKeyed]] artifact, held
+    * in memory with the key, version (`ts`) and indexed metadata of every
+    * node: the element [[loadIndexKeyed]] yields and [[searchLoaded]]
+    * searches.
     */
-  def searchIndexKeyed(spark: org.apache.spark.sql.SparkSession,
-      path: String, keyCol: String, queries: Seq[(Long, Array[Double])],
-      k: Int, efSearch: Int = 64,
-      filter: Map[String, String] = Map.empty): DataFrame = {
-    require(k >= 1 && efSearch >= k, "searchIndexKeyed: need k>=1, efSearch>=k")
-    import spark.implicits._
-    val qb = spark.sparkContext.broadcast(queries.sortBy(_._1))
-    val fb = spark.sparkContext.broadcast(filter)
-    val perPart = spark.read.schema(keyedIndexSchema(keyCol)).parquet(path)
-      .select(col("pid"), col("idx"), col(keyCol), col("vec"), col("nbrs"),
-        col("metadata"), col("ts"))
-      .as[(Int, Int, String, Array[Double], Array[Int],
-        Map[String, String], Long)]
-      .repartition(col("pid"))
-      .mapPartitions { it =>
-        val flt = fb.value
-        it.toArray.groupBy(_._1).iterator.flatMap { case (_, part) =>
-          val rows = part.sortBy(_._2)
-          require(rows.zipWithIndex.forall { case (r, i) => r._2 == i },
-            "searchIndexKeyed: corrupt artifact — idx not dense from 0")
-          val index = new Index(1, 1) // params unused on the load path
-          index.loadGraph(rows.map(_._4), rows.map(_._5))
-          val allowed =
-            if (flt.isEmpty) null
-            else {
-              val bs = new java.util.BitSet(rows.length)
-              var i = 0
-              while (i < rows.length) {
-                val md = rows(i)._6
-                if (md != null && flt.forall { case (fk, fv) =>
-                  md.get(fk).contains(fv) }) bs.set(i)
-                i += 1
-              }
-              bs
-            }
-          qb.value.iterator.flatMap { case (qid, qv) =>
-            index.search(qv, math.max(efSearch, k), allowed)
-              .map { case (dist, i) => (qid, rows(i)._3, rows(i)._7, dist) }
+  final class KeyedGraph private[Nsw] (index: Index, keys: Array[String],
+      ts: Array[Long], metadata: Array[Map[String, String]]) {
+
+    /** Every query's whole beam over this graph, as (query_id, key, ts,
+      * score). The metadata equality `filter` marks the allowed nodes, so
+      * it applies INSIDE the beam (see [[Index.search]]).
+      */
+    private[Nsw] def search(queries: Array[(Long, Array[Double])], ef: Int,
+        filter: Map[String, String]): Iterator[(Long, String, Long, Double)] = {
+      val allowed =
+        if (filter.isEmpty) null
+        else {
+          val bs = new java.util.BitSet(keys.length)
+          var i = 0
+          while (i < keys.length) {
+            val md = metadata(i)
+            if (md != null && filter.forall { case (fk, fv) =>
+              md.get(fk).contains(fv) }) bs.set(i)
+            i += 1
           }
+          bs
         }
+      queries.iterator.flatMap { case (qid, qv) =>
+        index.search(qv, ef, allowed).iterator
+          .map { case (dist, i) => (qid, keys(i), ts(i), dist) }
       }
-      .toDF("query_id", keyCol, "ts", "score")
-    perPart
+    }
+  }
+
+  /** Load a [[buildIndexKeyed]] artifact as one RDD partition per `pid`
+    * directory, whose one element is that partition's [[KeyedGraph]]:
+    * each directory is its own scan, coalesced to one task, so the load
+    * has no exchange, and vectors and adjacency are taken as stored (no
+    * reconstruction). The RDD comes back unpersisted. The caller persists
+    * it and owns the block (`VectorStore` keeps one per handle): every
+    * [[searchLoaded]] job over a held RDD then searches graphs already in
+    * executor memory, and the artifact read is only its lineage.
+    */
+  def loadIndexKeyed(spark: SparkSession, path: String,
+      keyCol: String): RDD[KeyedGraph] = {
+    import spark.implicits._
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val pids = fs.listStatus(root).filter(_.isDirectory).map(_.getPath.getName)
+      .collect { case n if n.startsWith("pid=") => n.stripPrefix("pid=").toInt }
+      .sorted
+    val perPid = pids.toSeq.map { pid =>
+      spark.read.schema(keyedIndexSchema(keyCol)).option("basePath", path)
+        .parquet(s"$path/pid=$pid")
+        .select(col("idx"), col(keyCol), col("vec"), col("nbrs"),
+          col("metadata"), col("ts"))
+        .as[(Int, String, Array[Double], Array[Int], Map[String, String], Long)]
+        .rdd.coalesce(1)
+        .mapPartitions { it =>
+          val rows = it.toArray.sortBy(_._1)
+          require(rows.zipWithIndex.forall { case (r, i) => r._1 == i },
+            s"loadIndexKeyed: corrupt artifact — pid $pid idx not dense from 0")
+          val index = new Index(1, 1) // params unused on the load path
+          index.loadGraph(rows.map(_._3), rows.map(_._4))
+          Iterator(new KeyedGraph(index, rows.map(_._2), rows.map(_._6),
+            rows.map(_._5)))
+        }
+    }
+    if (perPid.isEmpty) spark.sparkContext.emptyRDD[KeyedGraph]
+    else spark.sparkContext.union(perPid)
+  }
+
+  /** Beam-search held graphs ([[loadIndexKeyed]]) for a query batch in ONE
+    * job with no exchange and no broadcast: the queries and the metadata
+    * equality `filter` travel in the task closure, and each task searches
+    * the graph its partition holds. The filter is evaluated against the
+    * INDEXED metadata inside the beam (disallowed nodes are traversed,
+    * never collected), so a full-width beam is exhaustive-over-allowed:
+    * exact filtered search, the oracle hook. Returns the WHOLE beam per
+    * (graph, query), the store's overfetch budget for dropping stale or
+    * deleted versions, as (query_id, key, ts, score). The collect is
+    * bounded: at most graphs × queries × max(efSearch, k) rows.
+    */
+  def searchLoaded(graphs: RDD[KeyedGraph], queries: Seq[(Long, Array[Double])],
+      k: Int, efSearch: Int = 64,
+      filter: Map[String, String] = Map.empty): Array[(Long, String, Long, Double)] = {
+    require(k >= 1 && efSearch >= k, "searchLoaded: need k>=1, efSearch>=k")
+    val qs = queries.sortBy(_._1).toArray
+    val ef = math.max(efSearch, k)
+    graphs.flatMap(_.search(qs, ef, filter)).collect()
   }
 
   /** STRING-keyed [[appendToIndex]]: identical mechanics (route by

@@ -55,15 +55,16 @@ object PipelineQueries {
     // MinHash+LSH near-dup: shingle(5) → 16 minhashes → 4 bands → bucket
     // join → exact Jaccard on candidates; 10 closest candidate pairs.
     QueryDef("q17_minhash_lsh_dedup",
-      // OWNED cache lifetime (r16, ADVICE r15): the unscoped form leaked
-      // the candidate checkpoint to the ContextCleaner; the scoped form
-      // frees it eagerly, with the bounded top-10 materialized inside the
-      // block (the q92/q162 pattern)
+      // OWNED cache lifetime: the scoped form frees the signature cache
+      // and candidate blocks when the block ends, so the result must not
+      // read them lazily. It is collected inside the block (at most 10
+      // rows, the limit) and escapes as a driver-side local relation: no
+      // block outlives the query.
       (s, d) => Dedup.withMinhashPairs(Tables.documents(s, d), "doc_id",
           "text") { pairs =>
-        pairs.orderBy(col("jac").desc, col("a").asc, col("b").asc)
+        val top = pairs.orderBy(col("jac").desc, col("a").asc, col("b").asc)
           .limit(10)
-          .localCheckpoint(true)
+        s.createDataFrame(java.util.Arrays.asList(top.collect(): _*), top.schema)
       },
       Some(s"""WITH sh AS (SELECT doc_id, $duckShingles AS shingles FROM documents),
         |hv AS (SELECT doc_id, shingles, list_transform(shingles, s -> CAST('0x'||substr(md5(s),25,8) AS BIGINT)) AS hs FROM sh),

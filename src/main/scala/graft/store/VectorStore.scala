@@ -2,14 +2,17 @@ package graft.store
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.{Constants, Schemas}
 import graft.functions.VectorFunctions
-import graft.operators.{Knn, SampledKMeans, SimilaritySearch}
+import graft.operators.{Knn, Nsw, SampledKMeans, SimilaritySearch}
 
 /** Parquet/JSON-backed keyed vector table — the reference's whole datanode
   * storage engine (`src/datanode/handler.py:20-428` + WAL
@@ -39,8 +42,12 @@ import graft.operators.{Knn, SampledKMeans, SimilaritySearch}
   * `Nsw`, `Pq`, `SimilaritySearch`), so no read runs a schema-inference
   * job. Dim validation (R8) splits the batch instead of aborting it,
   * mirroring the reference's per-op reject (`datanode/handler.py:228-232`).
+  *
+  * A handle that has served [[searchNsw]] holds that tier's graphs in
+  * executor memory (one persisted RDD); [[close]] frees it.
   */
-class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim) {
+class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim)
+    extends AutoCloseable {
   import VectorStore._
 
   private val walDir      = s"$baseDir/wal"
@@ -338,6 +345,23 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
 
   private val nswDir = s"$baseDir/nsw_index"
 
+  /** The per-`pid` NSW graphs, loaded once from `nsw_index/` into one
+    * persisted RDD (MEMORY_ONLY; the artifact read is its lineage). This
+    * handle is the one owner of that block: it is freed by a rebuild or
+    * an append through this handle, replaced when the artifact's listing
+    * changes (a rebuild or append through another handle), and freed by
+    * [[close]].
+    */
+  private val nswGraphs = new Held[RDD[Nsw.KeyedGraph]](nswDir,
+    () => Nsw.loadIndexKeyed(spark, nswDir, "key").persist(StorageLevel.MEMORY_ONLY),
+    free = _.unpersist(blocking = false))
+
+  /** Frees what this handle holds in executor memory: the NSW graphs that
+    * [[searchNsw]] loaded. Files are untouched; a later [[searchNsw]]
+    * through this handle loads them again.
+    */
+  override def close(): Unit = nswGraphs.release()
+
   /** tier → `lastSeq` at the moment that tier's persisted index last
     * EXACTLY mirrored `compacted` (i.e. right after a full build): every
     * key is indexed once and live, so serving can skip the per-key
@@ -368,7 +392,8 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
     */
   def buildNswIndex(m: Int = 8, efConstruction: Int = 64,
       numPartitions: Int = 8): Unit = {
-    graft.operators.Nsw.buildIndexKeyed(compacted, "key", "vector", nswDir,
+    nswGraphs.release()
+    Nsw.buildIndexKeyed(compacted, "key", "vector", nswDir,
       m, efConstruction, numPartitions)
     built("nsw")
   }
@@ -383,7 +408,8 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
     */
   def appendToNswIndex(records: DataFrame,
       coversSeq: Option[Long] = None): Unit = {
-    graft.operators.Nsw.appendToIndexKeyed(
+    nswGraphs.release()
+    Nsw.appendToIndexKeyed(
       records.select(col("key"), col("vector"), col("metadata"), col("ts")),
       "key", "vector", nswDir)
     registerAppend("nsw", coversSeq)
@@ -401,28 +427,42 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
     * (key, ts) — a stale version of a re-put key is never served; the key
     * is an honest ANN miss until re-appended or rebuilt. The beam
     * (efSearch per partition) is the overfetch budget those drops spend.
+    *
+    * The beam runs when this method is called: ONE Spark job over the
+    * graphs this handle holds in executor memory (loaded on the first
+    * call, see [[close]]), with no exchange and no broadcast — the query
+    * and filter travel in the task closure. Its collect is bounded by
+    * partitions × max(efSearch, topK) rows. On a fresh index the top-k
+    * is cut on the driver and returned as a local relation, so reading
+    * the answer starts no further job.
     */
   def searchNsw(req: Knn.SearchRequest, efSearch: Int = 64): DataFrame = {
     requireQueryDim(req, "searchNsw")
     requireArtifact("nsw")
-    val cand = graft.operators.Nsw.searchIndexKeyed(spark, nswDir, "key",
-      Seq((0L, req.queryVector)), req.topK, efSearch, req.filter)
-    // fresh index == compacted: every candidate is the single live version
-    // of its key, so the newest-version window and the liveness semi-join
-    // (two shuffles) are provably no-ops — skip them (spec-pinned
-    // bit-identical; plan-pinned shuffle-free in VectorStoreSpec)
-    val live = if (fresh("nsw")) cand else {
+    val cand = Nsw.searchLoaded(nswGraphs.get, Seq((0L, req.queryVector)),
+      req.topK, efSearch, req.filter)
+    import spark.implicits._
+    if (fresh("nsw")) {
+      // fresh index == compacted: every candidate is the single live
+      // version of its key, so the newest-version window and the liveness
+      // semi-join are provably no-ops (spec-pinned bit-identical); the
+      // cut keeps Spark's sort order, score then key bytes
+      cand.filter(c => req.threshold.forall(c._4 <= _))
+        .map(c => (c._4, c._2)).sorted(ScoreKeyOrder).take(req.topK)
+        .map(_.swap).toSeq.toDF("key", "score")
+    } else {
       val w = Window.partitionBy(col("key"))
         .orderBy(col("ts").desc, col("score").asc)
-      val newest = cand.withColumn("__rn", row_number().over(w))
+      val newest = cand.map(c => (c._2, c._3, c._4)).toSeq.toDF("key", "ts", "score")
+        .withColumn("__rn", row_number().over(w))
         .where(col("__rn") === 1).drop("__rn")
-      newest.join(compacted.select("key", "ts"), Seq("key", "ts"),
+      val live = newest.join(compacted.select("key", "ts"), Seq("key", "ts"),
         "left_semi")
+      val scored = live.select(col("key"), col("score"))
+      req.threshold.map(t => scored.where(col("score") <= lit(t))).getOrElse(scored)
+        .orderBy(col("score").asc, col("key").asc)
+        .limit(req.topK)
     }
-    val scored = live.select(col("key"), col("score"))
-    req.threshold.map(t => scored.where(col("score") <= lit(t))).getOrElse(scored)
-      .orderBy(col("score").asc, col("key").asc)
-      .limit(req.topK)
   }
 
   private val ivfDir     = s"$baseDir/ivf_centroids"
@@ -583,6 +623,14 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
     * vectors, honoring the SearchRequest surface (metadata filter
     * pre-rank on the re-rank corpus, threshold post-score). Serves the
     * table as of the last [[buildPqIndex]], like [[searchIvf]].
+    *
+    * Two single-stage jobs. Phase 1 runs when this method is called: the
+    * ADC top-`rerankFrom.max(topK)` keys, collected to the driver (a
+    * bounded collect of at most that many keys). Phase 2 is the returned
+    * frame: a `key IN (…)` scan of the live table, re-ranked exactly.
+    * Neither phase has an exchange on a fresh index and an unfiltered
+    * request; the filter's semi-join and the stale-code semi-join run in
+    * phase 1.
     */
   def searchPq(req: Knn.SearchRequest, rerankFrom: Int = 50): DataFrame = {
     requireQueryDim(req, "searchPq")
@@ -602,11 +650,28 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
     val rankable =
       if (req.filter.isEmpty && fresh("pq")) encoded
       else encoded.join(corpus.select("key"), Seq("key"), "left_semi")
-    val cand = graft.operators.Pq.adcScores(rankable, "key", cb, req.queryVector)
-      .orderBy(col("score").asc, col("key").asc)
-      .limit(rerankFrom.max(req.topK))
-      .select(col("key"))
-    val scored = corpus.join(cand, "key")
+    val cand = topKeys(graft.operators.Pq.adcScores(rankable, "key", cb,
+      req.queryVector), "score", rerankFrom.max(req.topK))
+    rerank(corpus, cand, req)
+  }
+
+  /** Phase 1 of [[searchPq]] and [[searchBq]]: the keys of the `n` best
+    * rows by (`scoreCol`, key), collected to the driver — at most `n`. A
+    * root top-n plans as one TakeOrderedAndProject, so over a plain scan
+    * this is one job with no exchange.
+    */
+  private def topKeys(scored: DataFrame, scoreCol: String, n: Int): Array[String] =
+    scored.orderBy(col(scoreCol).asc, col("key").asc).limit(n)
+      .select(col("key")).collect().map(_.getString(0))
+
+  /** Phase 2 of [[searchPq]] and [[searchBq]]: the exact squared-L2
+    * re-rank of the phase-1 `keys`, read from `corpus` by a `key IN (…)`
+    * filter (no join, so no exchange), threshold post-score, top-k by
+    * (score, key).
+    */
+  private def rerank(corpus: DataFrame, keys: Array[String],
+      req: Knn.SearchRequest): DataFrame = {
+    val scored = corpus.where(col("key").isin(keys: _*))
       .select(col("key"),
         VectorFunctions.l2Sq(col("vector"), typedLit(req.queryVector)).as("score"))
     req.threshold.map(t => scored.where(col("score") <= lit(t))).getOrElse(scored)
@@ -712,6 +777,11 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
     * a stale version of a re-put key is never served and never eats
     * re-rank budget (both skipped while the index is exactly as built);
     * threshold applies to the exact re-rank score.
+    *
+    * Two single-stage jobs, as in [[searchPq]]: phase 1 (the Hamming
+    * top-`rerankFrom.max(topK)` keys, a bounded collect) runs when this
+    * method is called, and the returned frame is phase 2's `key IN (…)`
+    * re-rank scan. On a fresh index neither phase has an exchange.
     */
   def searchBq(req: Knn.SearchRequest, rerankFrom: Int = 50): DataFrame = {
     requireQueryDim(req, "searchBq")
@@ -729,18 +799,10 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
     }
     val corpus = Knn.metadataFilter(live, "metadata", req.filter)
     val qbits = packQueryBits(req.queryVector)
-    val cand = corpus
-      .select(col("key"),
-        graft.operators.Bq.hamming(col("bits"), typedLit(qbits)).as("ham"))
-      .orderBy(col("ham").asc, col("key").asc)
-      .limit(rerankFrom.max(req.topK))
-      .select("key")
-    val scored = compacted.join(cand, "key")
-      .select(col("key"),
-        VectorFunctions.l2Sq(col("vector"), typedLit(req.queryVector)).as("score"))
-    req.threshold.map(t => scored.where(col("score") <= lit(t))).getOrElse(scored)
-      .orderBy(col("score").asc, col("key").asc)
-      .limit(req.topK)
+    val cand = topKeys(corpus.select(col("key"),
+        graft.operators.Bq.hamming(col("bits"), typedLit(qbits)).as("ham")),
+      "ham", rerankFrom.max(req.topK))
+    rerank(compacted, cand, req)
   }
 
   /** Driver-side query pack — bit i of word w set iff v(w·32+i) > 0,
@@ -979,31 +1041,47 @@ object VectorStore {
   val BqDataSchema: StructType = StructType(Seq(
     StructField("key", StringType), StructField("bits", ArrayType(LongType))) ++ record)
 
-  /** A trained artifact held on a store handle, keyed by its files. Every
-    * [[get]] lists the artifact directory (names, sizes, mtimes: no Spark
-    * job) and reloads only when the listing differs from the one taken
-    * when the value was held, e.g. after a rebuild through another handle.
-    * Spark names each part file with a per-write UUID, so a rewrite
-    * always changes the listing. A cold handle loads once.
+  /** (score, key) in the order a Spark sort on those columns gives:
+    * doubles with NaN last, then keys by their UTF-8 bytes.
     */
-  private final class Held[T](dir: String, load: () => T) {
+  private val ScoreKeyOrder: Ordering[(Double, String)] = Ordering.Tuple2(
+    Ordering.Double.TotalOrdering,
+    Ordering.fromLessThan[String]((a, b) =>
+      UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0))
+
+  /** A value loaded from an artifact and held on a store handle, keyed by
+    * the artifact's files. Every [[get]] lists the artifact directory
+    * recursively (names, sizes, mtimes: no Spark job) and reloads only
+    * when the listing differs from the one taken when the value was held,
+    * e.g. after a rebuild or append through another handle. Spark names
+    * each part file with a per-write UUID, so a rewrite always changes
+    * the listing. A cold handle loads once. `free` runs on a value that
+    * is replaced or released, for values that hold a resource (the NSW
+    * graphs' persisted RDD).
+    */
+  private final class Held[T](dir: String, load: () => T,
+      free: T => Unit = (_: T) => ()) {
     private var value: Option[T] = None
     private var stamp: Seq[(String, Long, Long)] = Nil
 
-    def hold(v: T): Unit = synchronized { value = Some(v); stamp = listing() }
+    def hold(v: T): Unit = synchronized { release(); value = Some(v); stamp = listing() }
 
     def get: T = synchronized {
       val now = listing()
-      if (value.isEmpty || now != stamp) { value = Some(load()); stamp = now }
+      if (value.isEmpty || now != stamp) { release(); value = Some(load()); stamp = now }
       value.get
     }
+
+    /** Frees the held value, if any; the next [[get]] loads again. */
+    def release(): Unit = synchronized { value.foreach(free); value = None }
 
     private def listing(): Seq[(String, Long, Long)] = {
       val p = Paths.get(dir)
       if (!Files.isDirectory(p)) return Nil
-      val stream = Files.list(p)
+      val stream = Files.walk(p)
       try stream.toArray.map(_.asInstanceOf[java.nio.file.Path]).toSeq
-        .map(f => (f.getFileName.toString, Files.size(f),
+        .filter(f => Files.isRegularFile(f))
+        .map(f => (p.relativize(f).toString, Files.size(f),
           Files.getLastModifiedTime(f).toMillis))
         .sorted
       finally stream.close()

@@ -77,10 +77,12 @@ class StreamingSpec extends SparkSpec {
     // replayed history rows are duplicate nodes the newest-version
     // window collapses (and the append invalidated the fast path, so
     // the full serve discipline is in force)
-    val got = store.searchNsw(
+    // the search loads the graphs into a block the handle owns: close it
+    val got = try store.searchNsw(
         graft.operators.Knn.SearchRequest(Array(0.0, 0.0), topK = 3),
         efSearch = 1 << 20)
       .collect().map(r => (r.getString(0), r.getDouble(1)))
+      finally store.close()
     assert(got.map(_._1).toSeq === Seq("fresh", "near", "mid"), got.mkString(","))
     assert(math.abs(got.head._2 - 0.25) < 1e-12)
   }

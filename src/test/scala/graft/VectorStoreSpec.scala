@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.util.Using
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -30,6 +32,19 @@ class VectorStoreSpec extends SparkSpec {
     (r.getString(0), r.getSeq[Double](1), r.getMap[String, String](2), r.getLong(3))).toSeq
 
   private lazy val probe = Probe.Listener.attach(spark)
+
+  // A handle that served searchNsw holds its graphs in a persisted RDD
+  // until closed, so every test that serves NSW opens its handles through
+  // `Using` and leaves no block behind in the shared session.
+
+  /** The executed plans of every SQL execution `run` starts, and its
+    * answer: PQ and BQ run their phase 1 inside the search call, so the
+    * returned frame's own plan is phase 2 alone.
+    */
+  private def served(run: => DataFrame): (String, Seq[(String, Double)]) = {
+    val m = probe.measure(pairs(run))
+    (m.plans.map(_.executedPlan.toString).mkString("\n"), m.value)
+  }
 
   test("put then get round-trips; dim validation rejects bad rows") {
     val store = new VectorStore(spark, tmpDir(), dim = 2)
@@ -247,33 +262,34 @@ class VectorStoreSpec extends SparkSpec {
   }
 
   test("NSW artifact serves bit-identical to the live build (approx + exact)") {
-    val store = new VectorStore(spark, tmpDir(), dim = 2)
-    // 16 keys over 4 partitions: partitions larger than the approx beam
-    val rows = (0 until 16).map { i =>
-      rec(f"k$i%02d", Array(i.toFloat, (i % 5).toFloat), 10,
-        tag = if (i % 2 == 0) "even" else "odd")
+    Using.resource(new VectorStore(spark, tmpDir(), dim = 2)) { store =>
+      // 16 keys over 4 partitions: partitions larger than the approx beam
+      val rows = (0 until 16).map { i =>
+        rec(f"k$i%02d", Array(i.toFloat, (i % 5).toFloat), 10,
+          tag = if (i % 2 == 0) "even" else "odd")
+      }
+      store.put(batch(rows: _*))
+      store.buildNswIndex(m = 4, efConstruction = 16, numPartitions = 4)
+      def collectPairs(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
+      val req = Knn.SearchRequest(Array(3.0, 2.0), topK = 3)
+      // same partitioning, same insertion order -> same graphs -> the
+      // served beam must equal the live build's beam EXACTLY, approximate
+      // (ef = 3 < partition size) and exhaustive alike
+      Seq(3, 1 << 20).foreach { ef =>
+        assert(collectPairs(store.searchNsw(req, efSearch = ef)) ===
+          collectPairs(store.searchNswLive(req, m = 4, efConstruction = 16,
+            efSearch = ef, numPartitions = 4)), s"ef=$ef")
+      }
+      // filtered + threshold at the exactness invariant: beam-internal
+      // filtering is exhaustive-over-allowed, so all three tiers agree
+      val freq = Knn.SearchRequest(Array(3.0, 2.0), topK = 4,
+        filter = Map("tag" -> "odd"), threshold = Some(50.0))
+      val served = collectPairs(store.searchNsw(freq, efSearch = 1 << 20))
+      assert(served === collectPairs(store.searchNswLive(freq,
+        efSearch = 1 << 20)))
+      assert(served === collectPairs(store.search(freq)))
     }
-    store.put(batch(rows: _*))
-    store.buildNswIndex(m = 4, efConstruction = 16, numPartitions = 4)
-    def collectPairs(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
-    val req = Knn.SearchRequest(Array(3.0, 2.0), topK = 3)
-    // same partitioning, same insertion order -> same graphs -> the
-    // served beam must equal the live build's beam EXACTLY, approximate
-    // (ef = 3 < partition size) and exhaustive alike
-    Seq(3, 1 << 20).foreach { ef =>
-      assert(collectPairs(store.searchNsw(req, efSearch = ef)) ===
-        collectPairs(store.searchNswLive(req, m = 4, efConstruction = 16,
-          efSearch = ef, numPartitions = 4)), s"ef=$ef")
-    }
-    // filtered + threshold at the exactness invariant: beam-internal
-    // filtering is exhaustive-over-allowed, so all three tiers agree
-    val freq = Knn.SearchRequest(Array(3.0, 2.0), topK = 4,
-      filter = Map("tag" -> "odd"), threshold = Some(50.0))
-    val served = collectPairs(store.searchNsw(freq, efSearch = 1 << 20))
-    assert(served === collectPairs(store.searchNswLive(freq,
-      efSearch = 1 << 20)))
-    assert(served === collectPairs(store.search(freq)))
   }
 
   test("scanAsOf: time travel to any append point, across compaction and reopen") {
@@ -335,34 +351,36 @@ class VectorStoreSpec extends SparkSpec {
   }
 
   test("NSW fresh-index fast path: shuffle-free plan, parity with the full discipline") {
-    val dir = tmpDir()
-    val store = new VectorStore(spark, dir, dim = 2)
-    store.put(batch((0 until 12).map(i =>
-      rec(f"k$i%02d", Array(i.toFloat, (i % 3).toFloat), 10)): _*))
-    store.buildNswIndex(m = 4, efConstruction = 16, numPartitions = 4)
-    val req = Knn.SearchRequest(Array(2.0, 1.0), topK = 3)
-    // fresh build: the newest-version window and liveness semi-join are
-    // provably no-ops — the plan must not contain either shuffle
-    val freshPlan = store.searchNsw(req, efSearch = 1 << 20)
-      .queryExecution.executedPlan.toString
-    assert(!freshPlan.contains("Window") && !freshPlan.contains("Join"),
-      freshPlan)
-    val fresh = store.searchNsw(req, efSearch = 1 << 20)
-      .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
-    // cold reopen: same on-disk state, but freshness is driver state →
-    // conservative full-discipline path; results must be bit-identical
-    val reopened = new VectorStore(spark, dir, dim = 2)
-    val slowPlan = reopened.searchNsw(req, efSearch = 1 << 20)
-      .queryExecution.executedPlan.toString
-    assert(slowPlan.contains("Window") && slowPlan.contains("Join"), slowPlan)
-    assert(reopened.searchNsw(req, efSearch = 1 << 20)
-      .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq === fresh)
-    // any store write invalidates the fast path (a re-put key's stale
-    // indexed version must fail liveness, which needs the semi-join)
-    store.put(batch(rec("k00", Array(9f, 9f), 20)))
-    val afterWrite = store.searchNsw(req, efSearch = 1 << 20)
-      .queryExecution.executedPlan.toString
-    assert(afterWrite.contains("Join"), afterWrite)
+    Using.Manager { use =>
+      val dir = tmpDir()
+      val store = use(new VectorStore(spark, dir, dim = 2))
+      store.put(batch((0 until 12).map(i =>
+        rec(f"k$i%02d", Array(i.toFloat, (i % 3).toFloat), 10)): _*))
+      store.buildNswIndex(m = 4, efConstruction = 16, numPartitions = 4)
+      val req = Knn.SearchRequest(Array(2.0, 1.0), topK = 3)
+      // fresh build: the newest-version window and liveness semi-join are
+      // provably no-ops — the plan must not contain either shuffle
+      val freshPlan = store.searchNsw(req, efSearch = 1 << 20)
+        .queryExecution.executedPlan.toString
+      assert(!freshPlan.contains("Window") && !freshPlan.contains("Join"),
+        freshPlan)
+      val fresh = store.searchNsw(req, efSearch = 1 << 20)
+        .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
+      // cold reopen: same on-disk state, but freshness is driver state →
+      // conservative full-discipline path; results must be bit-identical
+      val reopened = use(new VectorStore(spark, dir, dim = 2))
+      val slowPlan = reopened.searchNsw(req, efSearch = 1 << 20)
+        .queryExecution.executedPlan.toString
+      assert(slowPlan.contains("Window") && slowPlan.contains("Join"), slowPlan)
+      assert(reopened.searchNsw(req, efSearch = 1 << 20)
+        .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq === fresh)
+      // any store write invalidates the fast path (a re-put key's stale
+      // indexed version must fail liveness, which needs the semi-join)
+      store.put(batch(rec("k00", Array(9f, 9f), 20)))
+      val afterWrite = store.searchNsw(req, efSearch = 1 << 20)
+        .queryExecution.executedPlan.toString
+      assert(afterWrite.contains("Join"), afterWrite)
+    }.get
   }
 
   test("IVF/BQ/PQ fresh-index fast path: no window or liveness semi-join, " +
@@ -376,34 +394,34 @@ class VectorStoreSpec extends SparkSpec {
     store.buildBqIndex()
     store.buildPqIndex(numSub = 2, numWords = 4)
     val req = Knn.SearchRequest(Array(2.0, 1.0), topK = 3)
-    def serve(s: VectorStore): Seq[(String, DataFrame)] = Seq(
-      "ivf" -> s.searchIvf(req, nprobe = 2),
-      "bq" -> s.searchBq(req, rerankFrom = 12),
-      "pq" -> s.searchPq(req, rerankFrom = 12))
+    // every SQL execution of each call: PQ/BQ run phase 1 inside the call
+    def serve(s: VectorStore): Seq[(String, (String, Seq[(String, Double)]))] = Seq(
+      "ivf" -> served(s.searchIvf(req, nprobe = 2)),
+      "bq" -> served(s.searchBq(req, rerankFrom = 12)),
+      "pq" -> served(s.searchPq(req, rerankFrom = 12)))
     // fresh builds: every key indexed once and live, so neither the
     // newest-version window nor the (key, ts) semi-join is in the plan
     val fresh = serve(store)
-    fresh.foreach { case (t, df) =>
-      val p = planOf(df)
+    fresh.foreach { case (t, (p, _)) =>
       assert(!p.contains("Window") && !p.contains("LeftSemi"), s"$t: $p")
     }
     // a filtered PQ request keeps its pre-rank semi-join even when fresh
-    val filtered = store.searchPq(req.copy(filter = Map("tag" -> "t0")), rerankFrom = 12)
-    assert(planOf(filtered).contains("LeftSemi"), planOf(filtered))
-    assert(pairs(filtered) === pairs(store.search(req.copy(filter = Map("tag" -> "t0")))))
+    val (filteredPlan, filtered) =
+      served(store.searchPq(req.copy(filter = Map("tag" -> "t0")), rerankFrom = 12))
+    assert(filteredPlan.contains("LeftSemi"), filteredPlan)
+    assert(filtered === pairs(store.search(req.copy(filter = Map("tag" -> "t0")))))
     // cold reopen: freshness is driver state, so the full discipline runs
     // and must give the same answers
     val reopened = serve(new VectorStore(spark, dir, dim = 2))
-    fresh.zip(reopened).foreach { case ((t, a), (_, b)) =>
-      val p = planOf(b)
+    fresh.zip(reopened).foreach { case ((t, (_, a)), (_, (p, b))) =>
       assert(p.contains("LeftSemi") && (t == "pq" || p.contains("Window")), s"$t: $p")
-      assert(pairs(a) === pairs(b), t)
-      assert(pairs(a) === pairs(store.search(req)), t)
+      assert(a === b, t)
+      assert(a === pairs(store.search(req)), t)
     }
     // any store write invalidates every tier's fast path
     store.put(batch(rec("k00", Array(9f, 9f), 20)))
-    serve(store).foreach { case (t, df) =>
-      assert(planOf(df).contains("LeftSemi"), s"$t: ${planOf(df)}")
+    serve(store).foreach { case (t, (p, _)) =>
+      assert(p.contains("LeftSemi"), s"$t: $p")
     }
   }
 
@@ -530,42 +548,43 @@ class VectorStoreSpec extends SparkSpec {
 
   test("NSW artifact append: LWW + soft-delete discipline, routing stable") {
     val dir = tmpDir()
-    val store = new VectorStore(spark, dir, dim = 2)
-    store.put(batch(
-      rec("a", Array(0f, 1f), 10), rec("b", Array(0f, 2f), 10),
-      rec("c", Array(5f, 5f), 10), rec("d", Array(7f, 7f), 10)))
-    store.buildNswIndex(m = 4, efConstruction = 16, numPartitions = 4)
-    // 1) new key via append becomes searchable without a rebuild
-    val add = batch(rec("e", Array(0f, 0.5f), 20))
-    store.put(add); store.appendToNswIndex(add)
-    val req = Knn.SearchRequest(Array(0.0, 0.0), topK = 3)
-    val got1 = store.searchNsw(req, efSearch = 1 << 20)
-      .collect().map(_.getString(0)).toSeq
-    assert(got1 === Seq("e", "a", "b"))
-    // 2) re-put + append: BOTH versions are indexed; the newer ts must
-    //    win (LWW over index rows), never the stale-but-closer one
-    val reput = batch(rec("a", Array(9f, 9f), 30))
-    store.put(reput); store.appendToNswIndex(reput)
-    val got2 = store.searchNsw(req, efSearch = 1 << 20)
-      .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
-    assert(got2 === Seq(("e", 0.25), ("b", 4.0), ("c", 50.0)))
-    // 3) re-put WITHOUT append: the stale indexed version fails (key, ts)
-    //    liveness — honest miss, never a stale score
-    store.put(batch(rec("b", Array(0f, 0.1f), 40)))
-    val got3 = store.searchNsw(req, efSearch = 1 << 20)
-      .collect().map(_.getString(0)).toSeq
-    assert(!got3.contains("b"), got3.toString)
-    // 4) deleted key drops out of the served index
-    store.delete(Seq("e"), ts = 50)
-    val got4 = store.searchNsw(req, efSearch = 1 << 20)
-      .collect().map(_.getString(0)).toSeq
-    assert(!got4.contains("e") && !got4.contains("b"), got4.toString)
-    // 5) appended rows landed in the SAME partition the build would use
-    val placed = spark.read.parquet(s"$dir/nsw_index")
-      .select(col("pid").cast("int"),
-        pmod(hash(col("key")), lit(4)).cast("int").as("want"))
-      .where(col("pid") =!= col("want"))
-    assert(placed.isEmpty, "append routed a key off its build partition")
+    Using.resource(new VectorStore(spark, dir, dim = 2)) { store =>
+      store.put(batch(
+        rec("a", Array(0f, 1f), 10), rec("b", Array(0f, 2f), 10),
+        rec("c", Array(5f, 5f), 10), rec("d", Array(7f, 7f), 10)))
+      store.buildNswIndex(m = 4, efConstruction = 16, numPartitions = 4)
+      // 1) new key via append becomes searchable without a rebuild
+      val add = batch(rec("e", Array(0f, 0.5f), 20))
+      store.put(add); store.appendToNswIndex(add)
+      val req = Knn.SearchRequest(Array(0.0, 0.0), topK = 3)
+      val got1 = store.searchNsw(req, efSearch = 1 << 20)
+        .collect().map(_.getString(0)).toSeq
+      assert(got1 === Seq("e", "a", "b"))
+      // 2) re-put + append: BOTH versions are indexed; the newer ts must
+      //    win (LWW over index rows), never the stale-but-closer one
+      val reput = batch(rec("a", Array(9f, 9f), 30))
+      store.put(reput); store.appendToNswIndex(reput)
+      val got2 = store.searchNsw(req, efSearch = 1 << 20)
+        .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
+      assert(got2 === Seq(("e", 0.25), ("b", 4.0), ("c", 50.0)))
+      // 3) re-put WITHOUT append: the stale indexed version fails (key, ts)
+      //    liveness — honest miss, never a stale score
+      store.put(batch(rec("b", Array(0f, 0.1f), 40)))
+      val got3 = store.searchNsw(req, efSearch = 1 << 20)
+        .collect().map(_.getString(0)).toSeq
+      assert(!got3.contains("b"), got3.toString)
+      // 4) deleted key drops out of the served index
+      store.delete(Seq("e"), ts = 50)
+      val got4 = store.searchNsw(req, efSearch = 1 << 20)
+        .collect().map(_.getString(0)).toSeq
+      assert(!got4.contains("e") && !got4.contains("b"), got4.toString)
+      // 5) appended rows landed in the SAME partition the build would use
+      val placed = spark.read.parquet(s"$dir/nsw_index")
+        .select(col("pid").cast("int"),
+          pmod(hash(col("key")), lit(4)).cast("int").as("want"))
+        .where(col("pid") =!= col("want"))
+      assert(placed.isEmpty, "append routed a key off its build partition")
+    }
   }
 
   test("tombstone GC: horizon drops old tombstones; retained ones still block late puts") {
@@ -847,30 +866,31 @@ class VectorStoreSpec extends SparkSpec {
   }
 
   test("every search tier rejects a query of another length before any job") {
-    val store = new VectorStore(spark, tmpDir(), dim = 4)
-    store.put(batch((0 until 8).map(i =>
-      rec(s"k$i", Array(i.toFloat, 1f, 0f, (i % 2).toFloat), 10)): _*))
-    store.compact()
-    store.buildNswIndex(m = 4, efConstruction = 8, numPartitions = 2)
-    store.buildIvfIndex(k = 2)
-    store.buildPqIndex(numSub = 2, numWords = 2)
-    store.buildBqIndex()
-    val short = Knn.SearchRequest(Array(0.0, 1.0), topK = 3)
-    val tiers: Seq[(String, Knn.SearchRequest => DataFrame)] = Seq(
-      "search" -> (r => store.search(r)),
-      "searchNswLive" -> (r => store.searchNswLive(r)),
-      "searchNsw" -> (r => store.searchNsw(r)),
-      "searchIvf" -> (r => store.searchIvf(r)),
-      "searchPq" -> (r => store.searchPq(r)),
-      "searchBq" -> (r => store.searchBq(r)))
-    tiers.foreach { case (name, run) =>
-      val m = probe.measure(scala.util.Try(run(short).collect()))
-      val e = m.value.failed.get
-      assert(e.isInstanceOf[IllegalArgumentException], s"$name: $e")
-      assert(e.getMessage.contains(s"$name: query dim 2 != store dim 4"), e.getMessage)
-      assert(m.totals.jobs === 0L, s"$name launched ${m.totals.jobs} job(s)")
-      // the right length is served
-      assert(run(short.copy(queryVector = Array(0.0, 1.0, 0.0, 0.0))).collect().nonEmpty, name)
+    Using.resource(new VectorStore(spark, tmpDir(), dim = 4)) { store =>
+      store.put(batch((0 until 8).map(i =>
+        rec(s"k$i", Array(i.toFloat, 1f, 0f, (i % 2).toFloat), 10)): _*))
+      store.compact()
+      store.buildNswIndex(m = 4, efConstruction = 8, numPartitions = 2)
+      store.buildIvfIndex(k = 2)
+      store.buildPqIndex(numSub = 2, numWords = 2)
+      store.buildBqIndex()
+      val short = Knn.SearchRequest(Array(0.0, 1.0), topK = 3)
+      val tiers: Seq[(String, Knn.SearchRequest => DataFrame)] = Seq(
+        "search" -> (r => store.search(r)),
+        "searchNswLive" -> (r => store.searchNswLive(r)),
+        "searchNsw" -> (r => store.searchNsw(r)),
+        "searchIvf" -> (r => store.searchIvf(r)),
+        "searchPq" -> (r => store.searchPq(r)),
+        "searchBq" -> (r => store.searchBq(r)))
+      tiers.foreach { case (name, run) =>
+        val m = probe.measure(scala.util.Try(run(short).collect()))
+        val e = m.value.failed.get
+        assert(e.isInstanceOf[IllegalArgumentException], s"$name: $e")
+        assert(e.getMessage.contains(s"$name: query dim 2 != store dim 4"), e.getMessage)
+        assert(m.totals.jobs === 0L, s"$name launched ${m.totals.jobs} job(s)")
+        // the right length is served
+        assert(run(short.copy(queryVector = Array(0.0, 1.0, 0.0, 0.0))).collect().nonEmpty, name)
+      }
     }
   }
 
@@ -949,5 +969,89 @@ class VectorStoreSpec extends SparkSpec {
     assert(pq(a) === pqExpected && pq(b) === pqExpected)
     a.buildPqIndex(numSub = 2, numWords = 2, seed = 7L)
     assert(pq(b) === pqExpected && pq(a) === pqExpected)
+  }
+
+  test("steady-state searchNsw is one job with no shuffle; searchPq and " +
+      "searchBq are two jobs and neither phase's plan holds an exchange") {
+    Using.resource(new VectorStore(spark, tmpDir(), dim = 2)) { store =>
+      store.put(batch((0 until 24).map(i =>
+        rec(f"k$i%02d", Array((i % 6).toFloat, (i / 6).toFloat), 10)): _*))
+      store.compact()
+      store.buildNswIndex(m = 4, efConstruction = 8, numPartitions = 3)
+      store.buildPqIndex(numSub = 2, numWords = 4)
+      store.buildBqIndex()
+      val req = Knn.SearchRequest(Array(2.0, 1.0), topK = 4)
+      val exact = pairs(store.search(req))
+      store.searchNsw(req).collect() // the first call loads the graphs
+      val nsw = probe.measure(pairs(store.searchNsw(req, efSearch = 1 << 20)))
+      assert(nsw.totals.jobs === 1L, nsw.totals)
+      assert(nsw.totals.shuffleReadBytes === 0L && nsw.totals.shuffleWriteBytes === 0L,
+        nsw.totals)
+      assert(nsw.value === exact)
+      Seq[(String, () => DataFrame)](
+          "searchPq" -> (() => store.searchPq(req, rerankFrom = 24)),
+          "searchBq" -> (() => store.searchBq(req, rerankFrom = 24))).foreach {
+        case (name, run) =>
+          val m = probe.measure(pairs(run()))
+          assert(m.totals.jobs === 2L, s"$name: ${m.totals}")
+          assert(m.plans.length === 2, name)
+          m.plans.map(_.executedPlan.toString).foreach { p =>
+            assert(!p.contains("Exchange"), s"$name: $p")
+          }
+          assert(m.value === exact, name)
+      }
+    }
+  }
+
+  test("the handle owns one persisted block of NSW graphs: loaded once, " +
+      "replaced by a rebuild, freed by close") {
+    def persisted = spark.sparkContext.getPersistentRDDs.size
+    val base = persisted
+    val store = new VectorStore(spark, tmpDir(), dim = 2)
+    try {
+      store.put(batch((0 until 12).map(i =>
+        rec(f"k$i%02d", Array(i.toFloat, (i % 3).toFloat), 10)): _*))
+      store.buildNswIndex(m = 4, efConstruction = 8, numPartitions = 3)
+      val req = Knn.SearchRequest(Array(2.0, 1.0), topK = 3)
+      assert(pairs(store.searchNsw(req, efSearch = 1 << 20)) === pairs(store.search(req)))
+      assert(persisted === base + 1)
+      (1 to 20).foreach(_ => store.searchNsw(req).collect())
+      assert(persisted === base + 1)
+      // a rebuild over a changed corpus frees the old block; the next
+      // search loads the new graphs into one block
+      store.put(batch(rec("k00", Array(2f, 1f), 20)))
+      store.buildNswIndex(m = 4, efConstruction = 8, numPartitions = 3)
+      assert(persisted === base)
+      assert(pairs(store.searchNsw(req, efSearch = 1 << 20)) === pairs(store.search(req)))
+      assert(persisted === base + 1)
+    } finally store.close()
+    assert(persisted === base)
+  }
+
+  test("a second handle serves an NSW rebuild made through the first") {
+    val dir = tmpDir()
+    def persisted = spark.sparkContext.getPersistentRDDs.size
+    val base = persisted
+    Using.Manager { use =>
+      val a = use(new VectorStore(spark, dir, dim = 2))
+      val b = use(new VectorStore(spark, dir, dim = 2))
+      a.put(batch((0 until 12).map(i =>
+        rec(f"k$i%02d", Array(i.toFloat, (i % 3).toFloat), 10)): _*))
+      a.buildNswIndex(m = 4, efConstruction = 8, numPartitions = 3)
+      val req = Knn.SearchRequest(Array(2.0, 1.0), topK = 3)
+      val before = pairs(a.search(req))
+      assert(pairs(b.searchNsw(req, efSearch = 1 << 20)) === before)
+      // k00 moves onto the query: b's held graphs still index the old
+      // version, which the (key, ts) liveness check would drop
+      a.put(batch(rec("k00", Array(2f, 1f), 20)))
+      a.buildNswIndex(m = 4, efConstruction = 8, numPartitions = 3)
+      val after = pairs(a.search(req))
+      assert(after.head === (("k00", 0.0)))
+      assert(after !== before)
+      assert(pairs(b.searchNsw(req, efSearch = 1 << 20)) === after)
+      // b replaced its block instead of adding one
+      assert(persisted === base + 1)
+    }.get
+    assert(persisted === base)
   }
 }
