@@ -1030,8 +1030,8 @@ class VectorStoreSpec extends SparkSpec {
 
   test("a second handle serves an NSW rebuild made through the first") {
     val dir = tmpDir()
-    def persisted = spark.sparkContext.getPersistentRDDs.size
-    val base = persisted
+    def persisted = spark.sparkContext.getPersistentRDDs
+    val base = persisted.keySet
     Using.Manager { use =>
       val a = use(new VectorStore(spark, dir, dim = 2))
       val b = use(new VectorStore(spark, dir, dim = 2))
@@ -1041,6 +1041,10 @@ class VectorStoreSpec extends SparkSpec {
       val req = Knn.SearchRequest(Array(2.0, 1.0), topK = 3)
       val before = pairs(a.search(req))
       assert(pairs(b.searchNsw(req, efSearch = 1 << 20)) === before)
+      // b's block, referenced here so that only b can free it (the
+      // ContextCleaner would also drop an unreferenced RDD after a GC)
+      val first = persisted -- base
+      assert(first.size === 1)
       // k00 moves onto the query: b's held graphs still index the old
       // version, which the (key, ts) liveness check would drop
       a.put(batch(rec("k00", Array(2f, 1f), 20)))
@@ -1050,8 +1054,9 @@ class VectorStoreSpec extends SparkSpec {
       assert(after !== before)
       assert(pairs(b.searchNsw(req, efSearch = 1 << 20)) === after)
       // b replaced its block instead of adding one
-      assert(persisted === base + 1)
+      val second = persisted -- base
+      assert(second.size === 1 && second.keySet != first.keySet)
     }.get
-    assert(persisted === base)
+    assert((persisted -- base).isEmpty)
   }
 }
