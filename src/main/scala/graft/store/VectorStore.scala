@@ -432,7 +432,11 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
     * graphs this handle holds in executor memory (loaded on the first
     * call, see [[close]]), with no exchange and no broadcast — the query
     * and filter travel in the task closure. Its collect is bounded by
-    * partitions × max(efSearch, topK) rows. On a fresh index the top-k
+    * partitions × max(efSearch, topK) (key, ts, score) rows, and by the
+    * indexed row count: the driver holds the whole beam, so an exhaustive
+    * `efSearch` (the oracle hook) brings every indexed version of every
+    * key through the driver — keep it to stores whose key count fits
+    * there, and serve with a beam near `topK`. On a fresh index the top-k
     * is cut on the driver and returned as a local relation, so reading
     * the answer starts no further job.
     */

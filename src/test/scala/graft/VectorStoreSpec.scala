@@ -1005,8 +1005,11 @@ class VectorStoreSpec extends SparkSpec {
 
   test("the handle owns one persisted block of NSW graphs: loaded once, " +
       "replaced by a rebuild, freed by close") {
-    def persisted = spark.sparkContext.getPersistentRDDs.size
-    val base = persisted
+    // counted against the blocks alive at the start, by id: earlier
+    // suites' unreferenced blocks may be dropped by the ContextCleaner
+    // at any GC, so a bare count could fall while this store is correct
+    val base = spark.sparkContext.getPersistentRDDs.keySet
+    def added = spark.sparkContext.getPersistentRDDs.keySet -- base
     val store = new VectorStore(spark, tmpDir(), dim = 2)
     try {
       store.put(batch((0 until 12).map(i =>
@@ -1014,18 +1017,20 @@ class VectorStoreSpec extends SparkSpec {
       store.buildNswIndex(m = 4, efConstruction = 8, numPartitions = 3)
       val req = Knn.SearchRequest(Array(2.0, 1.0), topK = 3)
       assert(pairs(store.searchNsw(req, efSearch = 1 << 20)) === pairs(store.search(req)))
-      assert(persisted === base + 1)
+      val first = added
+      assert(first.size === 1)
       (1 to 20).foreach(_ => store.searchNsw(req).collect())
-      assert(persisted === base + 1)
+      assert(added === first)
       // a rebuild over a changed corpus frees the old block; the next
       // search loads the new graphs into one block
       store.put(batch(rec("k00", Array(2f, 1f), 20)))
       store.buildNswIndex(m = 4, efConstruction = 8, numPartitions = 3)
-      assert(persisted === base)
+      assert(added.isEmpty)
       assert(pairs(store.searchNsw(req, efSearch = 1 << 20)) === pairs(store.search(req)))
-      assert(persisted === base + 1)
+      val second = added
+      assert(second.size === 1 && second != first)
     } finally store.close()
-    assert(persisted === base)
+    assert(added.isEmpty)
   }
 
   test("a second handle serves an NSW rebuild made through the first") {

@@ -1,21 +1,28 @@
 #!/usr/bin/env python3
 """Alternated A/B pairs of the end-to-end benchmark, and the verdict.
 
-    python3 tools/abpairs.py A_DIR B_DIR --workload W --seeds 31-40 \\
-        [--seconds 15] [--out DIR]
+    python3 tools/abpairs.py A_DIR B_DIR --workload W --seeds 31-40 [--seconds 15]
 
 A_DIR is the parent checkout and B_DIR the change. For each seed, one pair:
 `perfbench/run.py --trace 0` runs once in each checkout, with the side that
 runs first alternating from pair to pair. Every run's JSON result and the
-per-call-kind p50 lines it printed on stderr are kept in DIR (default
-B_DIR/.bench_build/abpairs/W), one file per run; a run already there is not
+per-call-kind p50 lines it printed on stderr are kept in
+B_DIR/.bench_build/abpairs/W, one file per run; a run already there is not
 repeated, so an interrupted series resumes.
 
 Printed at the end, per end-to-end metric: each side's median [quartiles],
-B's wins out of the pairs (ties count for neither side), and the verdict of
-the sandbox rule: B wins at least nine tenths of the pairs AND the medians
-differ by more than the distance between A's quartiles; a median worse
-than A's by more than the metric's bound in BENCHMARK.json is flagged.
+B's wins out of the pairs (ties count for neither side), and a verdict:
+  GAIN HOLDS       B wins at least nine tenths of the pairs, the medians
+                   differ by more than the distance between A's quartiles,
+                   every B run is correct and B failed no more operations
+                   than A in total;
+  GAIN WITHHELD    the first two hold but a B run is not correct or B
+                   failed more operations than A;
+  WORSE BEYOND BOUND  B's median is worse than A's by more than the
+                   metric's bound in BENCHMARK.json;
+  UNRESOLVED       A's quartiles are further apart than bound x A's median
+                   and not every B run reads better than every A run;
+  within bound     none of the above.
 Then the median over runs of each call kind's p50, per side.
 """
 import argparse
@@ -65,9 +72,8 @@ def main():
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True, help="an inclusive range, e.g. 31-40")
     ap.add_argument("--seconds", type=float, default=15)
-    ap.add_argument("--out")
     a = ap.parse_args()
-    out = a.out or os.path.join(a.b_dir, ".bench_build", "abpairs", a.workload)
+    out = os.path.join(a.b_dir, ".bench_build", "abpairs", a.workload)
     os.makedirs(out, exist_ok=True)
     with open(os.path.join(a.b_dir, "BENCHMARK.json")) as fh:
         metrics = json.load(fh)["end_to_end"]
@@ -99,6 +105,9 @@ def main():
            if not r["result"]["correct"]]
     if bad:
         print("runs not correct: " + ", ".join(bad))
+    failed = {s: sum(r["result"]["failed"] for r in runs[s]) for s in runs}
+    print(f"failed operations: A {failed['A']}, B {failed['B']}")
+    b_sound = all(r["result"]["correct"] for r in runs["B"]) and failed["B"] <= failed["A"]
     for m in metrics:
         name, lower = m["name"], m["better"] == "lower"
         va = [r["result"]["metrics"][name]["value"] for r in runs["A"]]
@@ -107,10 +116,13 @@ def main():
         ma, mb = statistics.median(va), statistics.median(vb)
         qa, qb = quartiles(va), quartiles(vb)
         gap = (ma - mb) if lower else (mb - ma)
-        holds = wins >= 0.9 * n and gap > qa[1] - qa[0]
-        verdict = ("GAIN HOLDS" if holds else
+        gains = wins >= 0.9 * n and gap > qa[1] - qa[0]
+        separated = (max(vb) < min(va)) if lower else (min(vb) > max(va))
+        verdict = ("GAIN HOLDS" if gains and b_sound else
+                   "GAIN WITHHELD" if gains else
                    f"WORSE BEYOND BOUND {m['bound']}" if -gap > m["bound"] * abs(ma) else
-                   "no claimable gain")
+                   "UNRESOLVED" if qa[1] - qa[0] > m["bound"] * abs(ma) and not separated else
+                   "within bound")
         print(f"{name:<18} A {ma:10.4g} [{qa[0]:.4g}, {qa[1]:.4g}]   "
               f"B {mb:10.4g} [{qb[0]:.4g}, {qb[1]:.4g}]   B wins {wins}/{n}   "
               f"gap {gap:+.4g} vs A IQR {qa[1] - qa[0]:.4g}   {verdict}")
