@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -55,6 +56,63 @@ object Bq {
   def hamming(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => bit_count(x.bitwiseXOR(y)).cast("long")),
       lit(0L), (acc, x) => acc + x)
+
+  /** Driver-side pack of one vector: bit i of word w set iff
+    * v(w·32+i) > 0 — the exact [[packBits]] layout (pinned in BqSpec).
+    */
+  def packQuery(v: Array[Double]): Array[Long] =
+    v.grouped(32).map(_.zipWithIndex.foldLeft(0L) { case (acc, (x, i)) =>
+      if (x > 0) acc | (1L << i) else acc
+    }).toArray
+
+  /** [[hamming]] in plain Scala: Σ popcount(a XOR b) over the words of two
+    * packs of one dimension (pinned equal to the SQL form in BqSpec).
+    */
+  def hammingOf(a: Array[Long], b: Array[Long]): Long = {
+    var acc = 0L
+    var w = 0
+    while (w < a.length) { acc += java.lang.Long.bitCount(a(w) ^ b(w)); w += 1 }
+    acc
+  }
+
+  /** One partition of a packed index held in executor memory: the
+    * records ([[KeyedRows]]) and their sign bits, row-aligned — the
+    * element [[loadHeld]] yields.
+    */
+  final class HeldRows private[Bq] (val rows: KeyedRows,
+      val bits: Array[Array[Long]])
+
+  /** A packed index (key STRING, bits, metadata, ts) as one [[HeldRows]]
+    * per partition of its scan, with no exchange. The RDD comes back
+    * unpersisted: the caller persists it and owns the block (`VectorStore`
+    * keeps one per handle), and the scan is only its lineage.
+    */
+  def loadHeld(packed: DataFrame): RDD[HeldRows] = {
+    val spark = packed.sparkSession
+    import spark.implicits._
+    packed.select(col("key"), col("bits"), col("metadata"), col("ts"))
+      .as[(String, Array[Long], Map[String, String], Long)].rdd
+      .mapPartitions { it =>
+        val rows = it.toArray
+        Iterator(new HeldRows(
+          new KeyedRows(rows.map(_._1), rows.map(_._4), rows.map(_._3)),
+          rows.map(_._2)))
+      }
+  }
+
+  /** The keys of the `n` best rows by (Hamming distance to `qbits`, key)
+    * over held packs, the metadata equality `filter` applied to the
+    * INDEXED metadata inside each task — one plain RDD job: each task
+    * keeps its best `n`, the driver merges ([[KeyedRows.topKeys]]; the
+    * collect is bounded by partitions × `n`). Keys must be unique, as in
+    * a fresh build.
+    */
+  def heldTopKeys(held: RDD[HeldRows], qbits: Array[Long], n: Int,
+      filter: Map[String, String]): Array[String] =
+    KeyedRows.topKeys(held, n) { b =>
+      KeyedRows.topN(b.rows.keys, n, b.rows.allowed(filter))(i =>
+        hammingOf(b.bits(i), qbits).toDouble)
+    }
 
   /** Batch KNN join over a PRE-PACKED corpus: top-k for EVERY query row,
     * Hamming first pass (packed corpus scan — 1/32 the bytes — with

@@ -273,7 +273,7 @@ object Nsw {
     * (query_id LONG, id LONG, score DOUBLE), k rows per query, ascending
     * (score, id) within a query. `efSearch >= max partition rows` makes
     * the result EXACT (see class doc). `numPartitions = Some(n)` PINS the
-    * datanode assignment to `pmod(hash(id), n)` (the [[buildIndex]]
+    * datanode assignment to `pmod(hash(id), n)` (the [[buildIndexKeyed]]
     * placement — live and artifact graphs then coincide bit-for-bit);
     * None uses the input's physical partitions as the datanodes.
     */
@@ -356,7 +356,7 @@ object Nsw {
 
   /** Build parameters persisted NEXT TO the graph rows (an
     * underscore-named sidecar, invisible to the parquet reader like
-    * `_SUCCESS`): [[appendToIndex]] must route new rows with the SAME
+    * `_SUCCESS`): [[appendToIndexKeyed]] must route new rows with the SAME
     * partition count and insert with the SAME (m, efConstruction) the
     * build used, or the artifact silently fragments.
     */
@@ -381,7 +381,7 @@ object Nsw {
     val p = metaFile(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     require(fs.exists(p), s"NSW index at $path has no ${p.getName} sidecar " +
-      "— was it written by buildIndex/buildIndexKeyed?")
+      "— was it written by buildIndexKeyed?")
     val in = fs.open(p)
     val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       finally in.close()
@@ -391,98 +391,6 @@ object Nsw {
       m.get.group(1).toInt
     }
     IndexMeta(field("numPartitions"), field("m"), field("efConstruction"))
-  }
-
-  /** Build and PERSIST the per-partition NSW graphs — the write-side
-    * index build of the reference's lifecycle (`_rebuild_hnsw_index` at
-    * checkpoint time, `datanode/handler.py:91-120`): construction cost is
-    * paid here ONCE; [[searchIndex]] then only reads. Layout: one row per
-    * indexed vector — (pid, idx, id, vec, nbrs) — where `pid` is the
-    * build partition (the "datanode"), `idx` the insertion index inside
-    * it, and `nbrs` the adjacency by idx; the parquet dir is PARTITIONED
-    * BY `pid` so [[appendToIndex]] can rewrite only touched graphs. Rows
-    * are hash-partitioned by `idCol` before the build, so the artifact is
-    * reproducible from the data alone.
-    */
-  def buildIndex(df: DataFrame, idCol: String, vecCol: String, path: String,
-      m: Int = 8, efConstruction: Int = 64, numPartitions: Int = 8): Unit = {
-    require(m >= 1 && efConstruction >= 1 && numPartitions >= 1,
-      "buildIndex: need m>=1, efConstruction>=1, numPartitions>=1")
-    val spark = df.sparkSession
-    import spark.implicits._
-    withPid(df.select(col(idCol).cast("long"),
-        col(vecCol).cast("array<double>")), idCol, numPartitions)
-      .repartition(numPartitions, col("pid"))
-      .as[(Long, Array[Double], Int)]
-      .mapPartitions { it =>
-        it.toArray.groupBy(_._3).iterator.flatMap { case (pid, part) =>
-          val rows = part.map(r => (r._1, r._2)).sortBy(_._1)
-          val index = new Index(m, efConstruction)
-          rows.foreach { case (_, v) => index.insert(v) }
-          rows.iterator.zipWithIndex.map { case ((id, v), i) =>
-            (pid, i, id, v, index.neighborsOf(i))
-          }
-        }
-      }
-      .toDF("pid", "idx", idCol, "vec", "nbrs")
-      .write.partitionBy("pid").mode("overwrite").parquet(path)
-    writeMeta(spark, path, IndexMeta(numPartitions, m, efConstruction))
-  }
-
-  /** Incrementally insert a NEW batch into a persisted [[buildIndex]]
-    * artifact — the `hnsw.add_items` live-insert analog
-    * (`src/datanode/handler.py:263-297`), mirroring the IVF append: each
-    * new row routes to its build partition (`pmod(hash(id), n)` — exactly
-    * the `repartition(n, col(id))` assignment, so build and append agree
-    * on placement), that partition's graph is LOADED (not rebuilt), the
-    * batch inserts in ascending-id order, and ONLY the touched partition
-    * dirs are rewritten — untouched graphs are never read or written.
-    * Graph shape can differ from a from-scratch build (insertion order
-    * differs), so approximate-beam results may differ; at full-width beam
-    * both are exhaustive and agree exactly (property-pinned in NswSpec).
-    * The partition swap is staged then renamed per-dir; a crash mid-swap
-    * loses index partitions, never data — rebuild recovers.
-    */
-  def appendToIndex(df: DataFrame, idCol: String, vecCol: String,
-      path: String): Unit = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val meta = readMeta(spark, path)
-    val fresh = df
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
-      .withColumn("pid",
-        pmod(hash(col(idCol)), lit(meta.numPartitions)).cast("int"))
-    val touched = fresh.select("pid").distinct().collect().map(_.getInt(0))
-    if (touched.isEmpty) return
-    val existing = spark.read.parquet(path)
-      .where(col("pid").isin(touched.map(Int.box): _*))
-      .select(col("pid").cast("int"), col("idx").cast("int"),
-        col(idCol).cast("long"), col("vec"), col("nbrs"))
-    // new rows ride the same relation with idx = -1 (real idx is >= 0)
-    val all = existing.unionByName(fresh.select(col("pid"),
-      lit(-1).as("idx"), col(idCol), col(vecCol).as("vec"),
-      lit(null).cast("array<int>").as("nbrs")))
-    val rebuilt = all
-      .as[(Int, Int, Long, Array[Double], Array[Int])]
-      .repartition(col("pid"))
-      .mapPartitions { it =>
-        it.toArray.groupBy(_._1).iterator.flatMap { case (pid, part) =>
-          val (old, add) = part.partition(_._2 >= 0)
-          val rows = old.sortBy(_._2)
-          require(rows.zipWithIndex.forall { case (r, i) => r._2 == i },
-            s"appendToIndex: corrupt artifact — pid $pid idx not dense from 0")
-          val index = new Index(meta.m, meta.efConstruction)
-          index.loadGraph(rows.map(_._4), rows.map(_._5))
-          val adds = add.sortBy(_._3)
-          adds.foreach(r => index.insert(r._4))
-          val ids  = rows.map(r => (r._3, r._4)) ++ adds.map(r => (r._3, r._4))
-          ids.iterator.zipWithIndex.map { case ((id, v), i) =>
-            (pid, i, id, v, index.neighborsOf(i))
-          }
-        }
-      }
-      .toDF("pid", "idx", idCol, "vec", "nbrs")
-    swapPartitions(spark, rebuilt, path, touched)
   }
 
   /** Write `rebuilt` (carrying a `pid` column) into an underscore-named
@@ -499,58 +407,27 @@ object Nsw {
       val src = new org.apache.hadoop.fs.Path(staging, s"pid=$p")
       val dst = new org.apache.hadoop.fs.Path(path, s"pid=$p")
       if (fs.exists(dst)) fs.delete(dst, true)
-      require(fs.exists(src), s"appendToIndex: staging lost pid=$p")
-      require(fs.rename(src, dst), s"appendToIndex: rename failed for pid=$p")
+      require(fs.exists(src), s"appendToIndexKeyed: staging lost pid=$p")
+      require(fs.rename(src, dst), s"appendToIndexKeyed: rename failed for pid=$p")
     }
     fs.delete(new org.apache.hadoop.fs.Path(staging), true)
   }
 
-  /** Serve a query batch from a PREBUILT index ([[buildIndex]]): each
-    * task reloads its partitions' graphs (vectors + adjacency — no
-    * reconstruction, no distance computations beyond the searches) and
-    * beam-searches every query; the per-partition candidates merge
-    * globally, as in [[nswTopKBatch]]. Same determinism and exactness
-    * invariant (efSearch >= partition size ⇒ exact). This is the
-    * steady-state serving economics: per batch, one index scan + Q beam
-    * searches — construction is entirely write-side.
-    */
-  def searchIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      idCol: String, queries: Seq[(Long, Array[Double])], k: Int,
-      efSearch: Int = 64): DataFrame = {
-    require(k >= 1 && efSearch >= k, "searchIndex: need k>=1, efSearch>=k")
-    import spark.implicits._
-    val qb = spark.sparkContext.broadcast(queries.sortBy(_._1))
-    val perPart = spark.read.parquet(path)
-      .select(col("pid").cast("int"), col("idx").cast("int"),
-        col(idCol).cast("long"), col("vec"), col("nbrs"))
-      .as[(Int, Int, Long, Array[Double], Array[Int])]
-      .repartition(col("pid"))
-      .mapPartitions { it =>
-        // a task may receive several pids — serve each graph separately
-        it.toArray.groupBy(_._1).iterator.flatMap { case (_, part) =>
-          val rows = part.sortBy(_._2)
-          require(rows.zipWithIndex.forall { case (r, i) => r._2 == i },
-            "searchIndex: corrupt artifact — idx not dense from 0")
-          val index = new Index(1, 1) // params unused on the load path
-          index.loadGraph(rows.map(_._4), rows.map(_._5))
-          qb.value.iterator.flatMap { case (qid, qv) =>
-            index.search(qv, math.max(efSearch, k)).take(k)
-              .map { case (dist, i) => (qid, rows(i)._3, dist) }
-          }
-        }
-      }
-      .toDF("query_id", idCol, "score")
-    mergeTopK(perPart, idCol, k)
-  }
-
-  /** STRING-keyed [[buildIndex]] for the store tier: artifact rows carry
-    * the record's `metadata` and `ts` alongside the graph — (pid, idx,
-    * key, vec, nbrs, metadata, ts) — so [[searchLoaded]] can apply
-    * the SearchRequest metadata filter DURING the beam (pre-rank) and the
-    * store can enforce LWW/soft-delete on (key, ts) post-merge. Same
-    * placement (`repartition(n, col(key))`), same ascending-key insertion
-    * order as the live `nswTopKBatchKeyed` path, so a live build over the
-    * same corpus yields bit-identical graphs.
+  /** Build and PERSIST the per-partition NSW graphs — the write-side
+    * index build of the reference's lifecycle (`_rebuild_hnsw_index` at
+    * checkpoint time, `datanode/handler.py:91-120`): construction cost is
+    * paid here ONCE; [[loadIndexKeyed]] + [[searchLoaded]] then only read.
+    * Layout: one row per indexed record — (pid, idx, key, vec, nbrs,
+    * metadata, ts) — where `pid` is the build partition (the "datanode"),
+    * `idx` the insertion index inside it and `nbrs` the adjacency by idx;
+    * the parquet dir is PARTITIONED BY `pid` so [[appendToIndexKeyed]]
+    * rewrites only touched graphs. The record's `metadata` and `ts` ride
+    * along so [[searchLoaded]] can apply the SearchRequest metadata filter
+    * DURING the beam (pre-rank) and the store can enforce LWW/soft-delete
+    * on (key, ts) post-merge. Same placement (`repartition(n, col(key))`),
+    * same ascending-key insertion order as the live `nswTopKBatchKeyed`
+    * path, so a live build over the same corpus yields bit-identical
+    * graphs.
     */
   def buildIndexKeyed(df: DataFrame, keyCol: String, vecCol: String,
       path: String, m: Int = 8, efConstruction: Int = 64,
@@ -593,11 +470,10 @@ object Nsw {
 
   /** One build partition's graph of a [[buildIndexKeyed]] artifact, held
     * in memory with the key, version (`ts`) and indexed metadata of every
-    * node: the element [[loadIndexKeyed]] yields and [[searchLoaded]]
-    * searches.
+    * node ([[KeyedRows]], by node index): the element [[loadIndexKeyed]]
+    * yields and [[searchLoaded]] searches.
     */
-  final class KeyedGraph private[Nsw] (index: Index, keys: Array[String],
-      ts: Array[Long], metadata: Array[Map[String, String]]) {
+  final class KeyedGraph private[Nsw] (index: Index, rows: KeyedRows) {
 
     /** Every query's whole beam over this graph, as (query_id, key, ts,
       * score). The metadata equality `filter` marks the allowed nodes, so
@@ -605,22 +481,10 @@ object Nsw {
       */
     private[Nsw] def search(queries: Array[(Long, Array[Double])], ef: Int,
         filter: Map[String, String]): Iterator[(Long, String, Long, Double)] = {
-      val allowed =
-        if (filter.isEmpty) null
-        else {
-          val bs = new java.util.BitSet(keys.length)
-          var i = 0
-          while (i < keys.length) {
-            val md = metadata(i)
-            if (md != null && filter.forall { case (fk, fv) =>
-              md.get(fk).contains(fv) }) bs.set(i)
-            i += 1
-          }
-          bs
-        }
+      val allowed = rows.allowed(filter)
       queries.iterator.flatMap { case (qid, qv) =>
         index.search(qv, ef, allowed).iterator
-          .map { case (dist, i) => (qid, keys(i), ts(i), dist) }
+          .map { case (dist, i) => (qid, rows.keys(i), rows.ts(i), dist) }
       }
     }
   }
@@ -655,8 +519,8 @@ object Nsw {
             s"loadIndexKeyed: corrupt artifact — pid $pid idx not dense from 0")
           val index = new Index(1, 1) // params unused on the load path
           index.loadGraph(rows.map(_._3), rows.map(_._4))
-          Iterator(new KeyedGraph(index, rows.map(_._2), rows.map(_._6),
-            rows.map(_._5)))
+          Iterator(new KeyedGraph(index,
+            new KeyedRows(rows.map(_._2), rows.map(_._6), rows.map(_._5))))
         }
     }
     if (perPid.isEmpty) spark.sparkContext.emptyRDD[KeyedGraph]
@@ -683,11 +547,21 @@ object Nsw {
     graphs.flatMap(_.search(qs, ef, filter)).collect()
   }
 
-  /** STRING-keyed [[appendToIndex]]: identical mechanics (route by
-    * `pmod(hash(key), n)`, load-insert-rewrite only touched partitions),
-    * carrying metadata/ts through. A re-put key gets a SECOND node — the
-    * store's serve path resolves versions by (key, ts) LWW + liveness,
-    * exactly the IVF append discipline (`appendToIvfIndex`).
+  /** Incrementally insert a NEW batch into a persisted [[buildIndexKeyed]]
+    * artifact — the `hnsw.add_items` live-insert analog
+    * (`src/datanode/handler.py:263-297`), mirroring the IVF append: each
+    * new row routes to its build partition (`pmod(hash(key), n)` — exactly
+    * the build's `repartition(n, col(key))` assignment), that partition's
+    * graph is LOADED (not rebuilt), the batch inserts in ascending-key
+    * order, and ONLY the touched partition dirs are rewritten. Graph shape
+    * can differ from a from-scratch build (insertion order differs), so
+    * approximate-beam results may differ; at full-width beam both are
+    * exhaustive and agree exactly (property-pinned in NswSpec). The
+    * partition swap is staged then renamed per-dir; a crash mid-swap
+    * loses index partitions, never data — rebuild recovers. A re-put key
+    * gets a SECOND node — the store's serve path resolves versions by
+    * (key, ts) LWW + liveness, exactly the IVF append discipline
+    * (`appendToIvfIndex`).
     */
   def appendToIndexKeyed(df: DataFrame, keyCol: String, vecCol: String,
       path: String): Unit = {

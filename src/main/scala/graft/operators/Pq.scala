@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
@@ -171,7 +172,7 @@ object Pq {
     * flops on one machine), folded in index order like every distance in
     * the engine.
     */
-  private[operators] def adcTable(cb: Codebooks, query: Array[Double]): Array[Array[Double]] = {
+  def adcTable(cb: Codebooks, query: Array[Double]): Array[Array[Double]] = {
     require(query.length == cb.dim, s"query dim ${query.length} != codebook dim ${cb.dim}")
     Array.tabulate(cb.numSub, cb.numWords) { (m, c) =>
       SampledKMeans.l2Sq(query.slice(m * cb.subDim, (m + 1) * cb.subDim), cb.words(m)(c))
@@ -189,6 +190,53 @@ object Pq {
       .map(m => element_at(typedLit(table(m)), element_at(col("codes"), m + 1) + 1))
       .reduceLeft(_ + _)
     encoded.select(col(idCol), score.as("score"))
+  }
+
+  /** One row's ADC score in plain Scala, the twin of [[adcScores]]: M
+    * lookups into the [[adcTable]] summed left-to-right over
+    * m = 0..M-1 — the same additions in the same order, so the doubles are
+    * equal (pinned in PqSpec).
+    */
+  def adcScore(table: Array[Array[Double]], codes: Array[Int]): Double = {
+    var s = table(0)(codes(0))
+    var m = 1
+    while (m < table.length) { s += table(m)(codes(m)); m += 1 }
+    s
+  }
+
+  /** One partition of an encoded table held in executor memory: keys and
+    * their codes, row-aligned — the element [[loadHeldCodes]] yields.
+    */
+  final class HeldCodes private[Pq] (val keys: Array[String],
+      val codes: Array[Array[Int]])
+
+  /** An encoded table (`idCol` STRING, `codes`) as one [[HeldCodes]] per
+    * partition of its scan, with no exchange. The RDD comes back
+    * unpersisted: the caller persists it and owns the block (`VectorStore`
+    * keeps one per handle), and the scan is only its lineage.
+    */
+  def loadHeldCodes(encoded: DataFrame, idCol: String): RDD[HeldCodes] = {
+    val spark = encoded.sparkSession
+    import spark.implicits._
+    encoded.select(col(idCol), col("codes")).as[(String, Array[Int])].rdd
+      .mapPartitions { it =>
+        val rows = it.toArray
+        Iterator(new HeldCodes(rows.map(_._1), rows.map(_._2)))
+      }
+  }
+
+  /** The keys of the `n` best rows by (ADC score, key) over held codes —
+    * the root top-n of [[adcScores]] as one plain RDD job: each task ranks
+    * its block with [[adcScore]] and keeps its best `n`, the driver merges
+    * ([[KeyedRows.topKeys]]; the collect is bounded by partitions × `n`).
+    * Keys must be unique, as in a fresh build.
+    */
+  def heldAdcTopKeys(held: RDD[HeldCodes], cb: Codebooks, query: Array[Double],
+      n: Int): Array[String] = {
+    val table = adcTable(cb, query)
+    KeyedRows.topKeys(held, n) { b =>
+      KeyedRows.topN(b.keys, n, null)(i => adcScore(table, b.codes(i)))
+    }
   }
 
   /** PQ top-k by ADC distance (ascending, tie-break id). `rerankFrom`:

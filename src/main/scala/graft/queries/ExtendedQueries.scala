@@ -216,11 +216,16 @@ object ExtendedQueries {
         val q = emb.where(col("vec_id") === 0)
           .select(col("embedding").cast("array<double>"))
           .head().getSeq[Double](0).toArray
-        store.searchBq(
-            graft.operators.Knn.SearchRequest(q, topK = 5,
-              filter = Map("parity" -> "0")),
-            rerankFrom = 50)
-          .orderBy(col("score").asc, col("key").asc)
+        // the first pass ranks the packs the handle holds in executor
+        // memory; the returned re-rank reads files, not that block, so the
+        // store is closed (its block freed) as soon as searchBq returns
+        val served =
+          try store.searchBq(
+              graft.operators.Knn.SearchRequest(q, topK = 5,
+                filter = Map("parity" -> "0")),
+              rerankFrom = 50)
+          finally store.close()
+        served.orderBy(col("score").asc, col("key").asc)
       },
       Some("""WITH q AS (SELECT list_transform(embedding, e -> CAST(e AS DOUBLE)) AS qe
         |  FROM embeddings WHERE vec_id = 0),

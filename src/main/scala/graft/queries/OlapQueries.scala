@@ -171,10 +171,16 @@ object OlapQueries {
         // symmetric = true: edges is its own reversal by construction, so
         // every node has an in-edge — pageRankInt skips the per-round
         // nodes left-join and the nodes distinct entirely
-        Graph.pageRankInt(edges, "a", "b", iters = 3, dedupe = false,
-            symmetric = true)
-          .orderBy(col("rank").desc, col("id").asc)
-          .limit(20)
+        val ranks = Graph.pageRankInt(edges, "a", "b", iters = 3,
+          dedupe = false, symmetric = true)
+        // OWNED block lifetime, as in q17: the ranks frame reads the block
+        // pageRankInt materialized, so the top 20 (at most 20 rows, the
+        // limit) are collected first, then the block is freed, and the
+        // answer escapes as a driver-side local relation
+        val top = ranks.orderBy(col("rank").desc, col("id").asc).limit(20)
+        val rows = top.collect()
+        Graph.freeMaterialized(ranks)
+        s.createDataFrame(java.util.Arrays.asList(rows: _*), top.schema)
       },
       Some("""WITH sp AS (SELECT DISTINCT l_suppkey AS a, l_partkey + 1000000 AS b FROM lineitem),
         |e AS (SELECT a AS s, b AS d FROM sp UNION SELECT b AS s, a AS d FROM sp),

@@ -8,11 +8,10 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.{Constants, Schemas}
 import graft.functions.VectorFunctions
-import graft.operators.{Knn, Nsw, SampledKMeans, SimilaritySearch}
+import graft.operators.{Bq, KeyedRows, Knn, Nsw, Pq, SampledKMeans, SimilaritySearch}
 
 /** Parquet/JSON-backed keyed vector table — the reference's whole datanode
   * storage engine (`src/datanode/handler.py:20-428` + WAL
@@ -43,8 +42,13 @@ import graft.operators.{Knn, Nsw, SampledKMeans, SimilaritySearch}
   * job. Dim validation (R8) splits the batch instead of aborting it,
   * mirroring the reference's per-op reject (`datanode/handler.py:228-232`).
   *
-  * A handle that has served [[searchNsw]] holds that tier's graphs in
-  * executor memory (one persisted RDD); [[close]] frees it.
+  * A handle resolves each artifact it reads once: the snapshot's live
+  * rows and the `ivf_data/`, `pq_data/` and `bq_data/` relations are held
+  * on the handle, so a read plans over a relation whose files are already
+  * listed. A handle that has served [[searchNsw]], or [[searchPq]] /
+  * [[searchBq]] on a fresh index, holds that tier's rows in executor
+  * memory (one persisted RDD per tier, at most three); [[close]] frees
+  * them.
   */
 class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim)
     extends AutoCloseable {
@@ -203,22 +207,42 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
   private def readSnapshot(dir: String): DataFrame =
     spark.read.schema(SnapshotSchema).parquet(dir)
 
+  /** The snapshot this handle last read, resolved once: (directory, its
+    * ops relation, that relation's live rows). Once `wal_pos.txt` points
+    * at `snapshot_<pos>`, that directory never changes (a compaction
+    * writes a new one), so its path is the whole key.
+    */
+  private var heldSnapshot: Option[(String, DataFrame, DataFrame)] = None
+
+  private def snapshotRelation(dir: String): (DataFrame, DataFrame) = synchronized {
+    heldSnapshot match {
+      case Some((d, ops, live)) if d == dir => (ops, live)
+      case _ =>
+        val ops = readSnapshot(dir)
+        val live = liveRows(ops)
+        heldSnapshot = Some((dir, ops, live))
+        (ops, live)
+    }
+  }
+
   private def snapshotOps: DataFrame =
-    latestSnapshot.map(readSnapshot).getOrElse(emptyOps)
+    latestSnapshot.map(snapshotRelation(_)._1).getOrElse(emptyOps)
 
   /** The live table: snapshot ∪ newer WAL, last-writer-wins, tombstone
     * winners filtered at read time. When no WAL batch follows the
     * snapshot (`walTip() <= readPos()`, directory names only) it is the
     * snapshot alone: a snapshot already holds one LWW winner per key, so
     * the window would change nothing and the read is one scan with no
-    * shuffle. Otherwise the window shuffles once on `key`.
+    * shuffle. That frame is held on the handle, one per snapshot
+    * directory, so every read while no write follows plans over the same
+    * resolved relation (its files are listed once, not per call).
+    * Otherwise the window shuffles once on `key`, planned per call over
+    * the held snapshot relation and the WAL's current files.
     */
-  def compacted: DataFrame = {
-    val winners =
-      if (walTip() <= readPos()) snapshotOps
-      else lwwWinners(snapshotOps, walOps().drop("node_id"))
-    liveRows(winners)
-  }
+  def compacted: DataFrame =
+    if (walTip() <= readPos())
+      latestSnapshot.map(snapshotRelation(_)._2).getOrElse(liveRows(emptyOps))
+    else liveRows(lwwWinners(snapshotOps, walOps().drop("node_id")))
 
   /** Resolved winners → live rows (tombstone winners dropped). The
     * tombstone test is wrapped in `coalesce` so it never becomes a parquet
@@ -357,10 +381,17 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
     free = _.unpersist(blocking = false))
 
   /** Frees what this handle holds in executor memory: the NSW graphs that
-    * [[searchNsw]] loaded. Files are untouched; a later [[searchNsw]]
-    * through this handle loads them again.
+    * [[searchNsw]] loaded, and the PQ codes and BQ packs that [[searchPq]]
+    * and [[searchBq]] loaded on a fresh index — at most three persisted
+    * RDDs. Files are untouched, and so are the held relations (they hold
+    * no executor memory); a later search through this handle loads its
+    * block again.
     */
-  override def close(): Unit = nswGraphs.release()
+  override def close(): Unit = {
+    nswGraphs.release()
+    pqCodes.release()
+    bqRows.release()
+  }
 
   /** tier → `lastSeq` at the moment that tier's persisted index last
     * EXACTLY mirrored `compacted` (i.e. right after a full build): every
@@ -452,7 +483,7 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
       // semi-join are provably no-ops (spec-pinned bit-identical); the
       // cut keeps Spark's sort order, score then key bytes
       cand.filter(c => req.threshold.forall(c._4 <= _))
-        .map(c => (c._4, c._2)).sorted(ScoreKeyOrder).take(req.topK)
+        .map(c => (c._4, c._2)).sorted(KeyedRows.ScoreKeyOrder).take(req.topK)
         .map(_.swap).toSeq.toDF("key", "score")
     } else {
       val w = Window.partitionBy(col("key"))
@@ -471,6 +502,10 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
 
   private val ivfDir     = s"$baseDir/ivf_centroids"
   private val ivfDataDir = s"$baseDir/ivf_data"
+
+  /** The `ivf_data/` relation, resolved once per listing of its files. */
+  private val ivfCells = new Held(ivfDataDir,
+    () => spark.read.schema(IvfDataSchema).parquet(ivfDataDir))
 
   /** The IVF centroids (index = cid), held from the last build through
     * this handle or loaded once from `ivf_centroids/`.
@@ -562,8 +597,7 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
     requireQueryDim(req, "searchIvf")
     requireArtifact("ivf")
     val probes = SimilaritySearch.probeOrder(ivfCentroids.get, req.queryVector, nprobe)
-    val cells = spark.read.schema(IvfDataSchema).parquet(ivfDataDir)
-      .where(col("cid").isin(probes: _*))
+    val cells = ivfCells.get.where(col("cid").isin(probes: _*))
     val live = if (fresh("ivf")) cells else {
       // duplicate index rows for one (key, ts) (e.g. the same batch
       // appended twice) collapse to one candidate — ties break to the
@@ -596,8 +630,21 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
   /** The PQ codebooks, held from the last build through this handle or
     * loaded once from `pq_codebooks/`.
     */
-  private val pqCodebooks = new Held(pqDir,
-    () => graft.operators.Pq.loadCodebooks(spark, pqDir))
+  private val pqCodebooks = new Held(pqDir, () => Pq.loadCodebooks(spark, pqDir))
+
+  /** The `pq_data/` relation, resolved once per listing of its files. */
+  private val pqData = new Held(pqDataDir,
+    () => spark.read.schema(PqDataSchema).parquet(pqDataDir))
+
+  /** The PQ codes held in executor memory (one persisted RDD, MEMORY_ONLY;
+    * the `pq_data/` scan is its lineage), loaded by the first [[searchPq]]
+    * that ranks on a fresh index. Owned as [[nswGraphs]] is: freed by a
+    * build through this handle, replaced when the listing changes, freed
+    * by [[close]].
+    */
+  private val pqCodes = new Held[RDD[Pq.HeldCodes]](pqDataDir,
+    () => Pq.loadHeldCodes(pqData.get, "key").persist(StorageLevel.MEMORY_ONLY),
+    free = _.unpersist(blocking = false))
 
   /** Train + persist the PQ index over the live table: codebooks as the
     * artifact, and the corpus ENCODED to M small codes per key
@@ -605,16 +652,16 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
     * cluster scans while full vectors stay on disk for the re-rank only
     * (SCALE.md "PQ / ADC"). Encode is the write-side cost, like IVF
     * assignment. The codebooks are trained on the driver from one bounded
-    * sample ([[graft.operators.Pq.trainCodebooks]]) and kept on this
+    * sample ([[Pq.trainCodebooks]]) and kept on this
     * handle.
     */
   def buildPqIndex(numSub: Int = 8, numWords: Int = 16, seed: Long = 42L): Unit = {
+    pqCodes.release()
     val base = compacted.persist()
     try {
-      val cb = graft.operators.Pq.trainCodebooks(base, "vector", numSub, numWords, seed)
-      graft.operators.Pq.saveCodebooks(spark, cb, pqDir)
-      Schemas.conform(graft.operators.Pq.encode(base, "key", "vector", cb),
-          PqDataSchema)
+      val cb = Pq.trainCodebooks(base, "vector", numSub, numWords, seed)
+      Pq.saveCodebooks(spark, cb, pqDir)
+      Schemas.conform(Pq.encode(base, "key", "vector", cb), PqDataSchema)
         .write.mode("overwrite").parquet(pqDataDir)
       pqCodebooks.hold(cb)
     } finally base.unpersist()
@@ -628,19 +675,23 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
     * pre-rank on the re-rank corpus, threshold post-score). Serves the
     * table as of the last [[buildPqIndex]], like [[searchIvf]].
     *
-    * Two single-stage jobs. Phase 1 runs when this method is called: the
-    * ADC top-`rerankFrom.max(topK)` keys, collected to the driver (a
-    * bounded collect of at most that many keys). Phase 2 is the returned
-    * frame: a `key IN (…)` scan of the live table, re-ranked exactly.
-    * Neither phase has an exchange on a fresh index and an unfiltered
-    * request; the filter's semi-join and the stale-code semi-join run in
-    * phase 1.
+    * Two single-stage jobs. Phase 1 runs when this method is called and
+    * yields the ADC top-`rerankFrom.max(topK)` keys on the driver. On a
+    * fresh index and an unfiltered request it is one plain RDD job over
+    * the codes this handle holds in executor memory (loaded by the first
+    * such call, see [[close]]): each task keeps its best keys, the driver
+    * merges, and no SQL query is analyzed, planned or run; the collect is
+    * bounded by partitions × `rerankFrom.max(topK)`. Otherwise it is a SQL
+    * root top-n over the held `pq_data/` relation, with the filter's and
+    * the stale-code semi-join, collecting at most that many keys. Phase 2
+    * is the returned frame: a `key IN (…)` scan of the live table,
+    * re-ranked exactly, with no exchange.
     */
   def searchPq(req: Knn.SearchRequest, rerankFrom: Int = 50): DataFrame = {
     requireQueryDim(req, "searchPq")
     requireArtifact("pq")
     val cb = pqCodebooks.get
-    val encoded = spark.read.schema(PqDataSchema).parquet(pqDataDir)
+    val n = rerankFrom.max(req.topK)
     val corpus = Knn.metadataFilter(compacted, "metadata", req.filter)
     // the metadata filter applies PRE-RANK (SearchRequest surface, like
     // search/searchIvf): rank only codes whose key survives the filter,
@@ -650,19 +701,19 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
     // since-deleted keys would otherwise consume rerankFrom budget only to
     // be dropped by the re-rank join, silently returning fewer than topK
     // rows while live matches exist. Only an unfiltered request against
-    // an index exactly as built skips it.
-    val rankable =
-      if (req.filter.isEmpty && fresh("pq")) encoded
-      else encoded.join(corpus.select("key"), Seq("key"), "left_semi")
-    val cand = topKeys(graft.operators.Pq.adcScores(rankable, "key", cb,
-      req.queryVector), "score", rerankFrom.max(req.topK))
+    // an index exactly as built skips it, and ranks the held codes.
+    val cand =
+      if (req.filter.isEmpty && fresh("pq"))
+        Pq.heldAdcTopKeys(pqCodes.get, cb, req.queryVector, n)
+      else topKeys(Pq.adcScores(
+          pqData.get.join(corpus.select("key"), Seq("key"), "left_semi"),
+          "key", cb, req.queryVector), "score", n)
     rerank(corpus, cand, req)
   }
 
-  /** Phase 1 of [[searchPq]] and [[searchBq]]: the keys of the `n` best
-    * rows by (`scoreCol`, key), collected to the driver — at most `n`. A
-    * root top-n plans as one TakeOrderedAndProject, so over a plain scan
-    * this is one job with no exchange.
+  /** Phase 1 of [[searchPq]] and [[searchBq]] off the fresh path: the keys
+    * of the `n` best rows by (`scoreCol`, key), collected to the driver —
+    * at most `n`. A root top-n plans as one TakeOrderedAndProject.
     */
   private def topKeys(scored: DataFrame, scoreCol: String, n: Int): Array[String] =
     scored.orderBy(col(scoreCol).asc, col("key").asc).limit(n)
@@ -685,23 +736,38 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
 
   private val bqDataDir = s"$baseDir/bq_data"
 
+  /** The `bq_data/` relation, resolved once per listing of its files. */
+  private val bqData = new Held(bqDataDir,
+    () => spark.read.schema(BqDataSchema).parquet(bqDataDir))
+
+  /** The BQ packs and their indexed records held in executor memory (one
+    * persisted RDD, MEMORY_ONLY; the `bq_data/` scan is its lineage),
+    * loaded by the first [[searchBq]] on a fresh index. Owned as
+    * [[nswGraphs]] is: freed by a build or append through this handle,
+    * replaced when the listing changes, freed by [[close]].
+    */
+  private val bqRows = new Held[RDD[Bq.HeldRows]](bqDataDir,
+    () => Bq.loadHeld(bqData.get).persist(StorageLevel.MEMORY_ONLY),
+    free = _.unpersist(blocking = false))
+
   /** Build + persist the binary-quantization index: the live table packed
     * to sign bits (dim/32 words per key — a 32× smaller scan than the
     * float corpus) alongside the indexed metadata and ts. Rebuild-only
     * build cost is one map-only pass; [[appendToBqIndex]] extends it
     * incrementally. Any dim works: a non-multiple-of-32 tail packs into
     * a final partial word whose unused high bits stay 0 on both the
-    * corpus ([[graft.operators.Bq.packBits]]) and query
-    * ([[packQueryBits]]) sides, so Hamming distances never see them.
+    * corpus ([[Bq.packBits]]) and query ([[Bq.packQuery]]) sides, so
+    * Hamming distances never see them.
     */
   def buildBqIndex(): Unit = {
+    bqRows.release()
     packRecords(compacted).write.mode("overwrite").parquet(bqDataDir)
     built("bq")
   }
 
   private def packRecords(records: DataFrame): DataFrame =
     Schemas.conform(records.select(col("key"),
-        graft.operators.Bq.packBits(col("vector"), dim).as("bits"),
+        Bq.packBits(col("vector"), dim).as("bits"),
         col("metadata"), col("ts")), BqDataSchema)
 
   /** Incrementally pack a NEW batch into the persisted BQ index — the
@@ -712,6 +778,7 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
     */
   def appendToBqIndex(records: DataFrame,
       coversSeq: Option[Long] = None): Unit = {
+    bqRows.release()
     packRecords(records).write.mode("append").parquet(bqDataDir)
     registerAppend("bq", coversSeq)
   }
@@ -782,40 +849,40 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
     * re-rank budget (both skipped while the index is exactly as built);
     * threshold applies to the exact re-rank score.
     *
-    * Two single-stage jobs, as in [[searchPq]]: phase 1 (the Hamming
-    * top-`rerankFrom.max(topK)` keys, a bounded collect) runs when this
-    * method is called, and the returned frame is phase 2's `key IN (…)`
-    * re-rank scan. On a fresh index neither phase has an exchange.
+    * Two single-stage jobs, as in [[searchPq]]. Phase 1 runs when this
+    * method is called and yields the Hamming top-`rerankFrom.max(topK)`
+    * keys on the driver. On a fresh index it is one plain RDD job over the
+    * packs this handle holds in executor memory (loaded by the first such
+    * call, see [[close]]), the filter applied to the indexed metadata
+    * inside each task: no SQL query runs, and the collect is bounded by
+    * partitions × `rerankFrom.max(topK)`. Otherwise it is a SQL root top-n
+    * over the held `bq_data/` relation with the newest-version window and
+    * the (key, ts) liveness semi-join. Phase 2 is the returned frame: a
+    * `key IN (…)` re-rank scan of the live table, with no exchange.
     */
   def searchBq(req: Knn.SearchRequest, rerankFrom: Int = 50): DataFrame = {
     requireQueryDim(req, "searchBq")
     requireArtifact("bq")
-    val packed = spark.read.schema(BqDataSchema).parquet(bqDataDir)
-    val live = if (fresh("bq")) packed else {
-      // newest-version window with a deterministic content tie-break (the
-      // lwwWinners discipline): a key appended twice with equal ts must
-      // resolve the same way on every run, not by partition order
-      val w = Window.partitionBy(col("key"))
-        .orderBy(col("ts").desc, xxhash64(to_json(struct(col("bits")))).desc)
-      val newest = packed.withColumn("__rn", row_number().over(w))
-        .where(col("__rn") === 1).drop("__rn")
-      newest.join(compacted.select("key", "ts"), Seq("key", "ts"), "left_semi")
-    }
-    val corpus = Knn.metadataFilter(live, "metadata", req.filter)
-    val qbits = packQueryBits(req.queryVector)
-    val cand = topKeys(corpus.select(col("key"),
-        graft.operators.Bq.hamming(col("bits"), typedLit(qbits)).as("ham")),
-      "ham", rerankFrom.max(req.topK))
+    val n = rerankFrom.max(req.topK)
+    val qbits = Bq.packQuery(req.queryVector)
+    val cand =
+      if (fresh("bq")) Bq.heldTopKeys(bqRows.get, qbits, n, req.filter)
+      else {
+        // newest-version window with a deterministic content tie-break
+        // (the lwwWinners discipline): a key appended twice with equal ts
+        // must resolve the same way on every run, not by partition order
+        val w = Window.partitionBy(col("key"))
+          .orderBy(col("ts").desc, xxhash64(to_json(struct(col("bits")))).desc)
+        val newest = bqData.get.withColumn("__rn", row_number().over(w))
+          .where(col("__rn") === 1).drop("__rn")
+        val live = newest.join(compacted.select("key", "ts"), Seq("key", "ts"),
+          "left_semi")
+        val corpus = Knn.metadataFilter(live, "metadata", req.filter)
+        topKeys(corpus.select(col("key"),
+            Bq.hamming(col("bits"), typedLit(qbits)).as("ham")), "ham", n)
+      }
     rerank(compacted, cand, req)
   }
-
-  /** Driver-side query pack — bit i of word w set iff v(w·32+i) > 0,
-    * the exact [[graft.operators.Bq.packBits]] layout (spec-pinned).
-    */
-  private def packQueryBits(v: Array[Double]): Seq[Long] =
-    v.grouped(32).map(_.zipWithIndex.foldLeft(0L) { case (acc, (x, i)) =>
-      if (x > 0) acc | (1L << i) else acc
-    }).toSeq
 
   // ---- unified artifact manifest ----
   // One catalog answering "is every index fresh for store seq N" with ONE
@@ -1045,14 +1112,6 @@ object VectorStore {
   val BqDataSchema: StructType = StructType(Seq(
     StructField("key", StringType), StructField("bits", ArrayType(LongType))) ++ record)
 
-  /** (score, key) in the order a Spark sort on those columns gives:
-    * doubles with NaN last, then keys by their UTF-8 bytes.
-    */
-  private val ScoreKeyOrder: Ordering[(Double, String)] = Ordering.Tuple2(
-    Ordering.Double.TotalOrdering,
-    Ordering.fromLessThan[String]((a, b) =>
-      UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0))
-
   /** A value loaded from an artifact and held on a store handle, keyed by
     * the artifact's files. Every [[get]] lists the artifact directory
     * recursively (names, sizes, mtimes: no Spark job) and reloads only
@@ -1061,7 +1120,7 @@ object VectorStore {
     * each part file with a per-write UUID, so a rewrite always changes
     * the listing. A cold handle loads once. `free` runs on a value that
     * is replaced or released, for values that hold a resource (the NSW
-    * graphs' persisted RDD).
+    * graphs', PQ codes' and BQ packs' persisted RDDs).
     */
   private final class Held[T](dir: String, load: () => T,
       free: T => Unit = (_: T) => ()) {

@@ -37,6 +37,44 @@ class BqSpec extends SparkSpec {
     assert(got === direct)
   }
 
+  test("packQuery and hammingOf are bit-identical to packBits and hamming") {
+    // 70 dims: a partial tail word; zeros and negatives set no bit
+    val rnd = new scala.util.Random(13)
+    val rows = Seq.fill(20)(Array.fill(70)((rnd.nextInt(5) - 2).toDouble))
+    val q = rows.head
+    val sql = rows.map(Tuple1(_)).toDF("v")
+      .select(Bq.packBits(col("v"), 70).as("bits"),
+        Bq.hamming(Bq.packBits(col("v"), 70), typedLit(Bq.packQuery(q))).as("ham"))
+      .collect().map(r => (r.getSeq[Long](0), r.getLong(1))).toSeq
+    assert(sql.map(_._1) === rows.map(v => Bq.packQuery(v).toSeq))
+    assert(sql.map(_._2) === rows.map(v => Bq.hammingOf(Bq.packQuery(v), Bq.packQuery(q))))
+  }
+
+  test("held top keys equal the SQL root top-n, ties and the filter included") {
+    val rnd = new scala.util.Random(17)
+    // 40 keys on 10 distinct vectors: Hamming ties everywhere, so the key
+    // order decides every cut
+    val packed = (0 until 40).map { i =>
+      val v = { val r = new scala.util.Random(i % 10); Array.fill(64)(r.nextGaussian()) }
+      (f"key$i%03d", v, Map("p" -> (i % 3).toString), i.toLong)
+    }.toDF("key", "vector", "metadata", "ts")
+      .select(col("key"), Bq.packBits(col("vector"), 64).as("bits"),
+        col("metadata"), col("ts"))
+      .repartition(3)
+    val held = Bq.loadHeld(packed)
+    val q = Array.fill(64)(rnd.nextGaussian())
+    Seq(Map.empty[String, String], Map("p" -> "1")).foreach { filter =>
+      Seq(1, 7, 40).foreach { n =>
+        val sql = graft.operators.Knn.metadataFilter(packed, "metadata", filter)
+          .select(col("key"), Bq.hamming(col("bits"), typedLit(Bq.packQuery(q))).as("ham"))
+          .orderBy(col("ham"), col("key")).limit(n)
+          .collect().map(_.getString(0)).toSeq
+        assert(Bq.heldTopKeys(held, Bq.packQuery(q), n, filter).toSeq === sql,
+          s"n=$n filter=$filter")
+      }
+    }
+  }
+
   test("full-overfetch bqTopK degrades to exact KNN (the oracle invariant)") {
     val emb = graft.core.Tables.embeddings(spark, sf0001)
     val n = emb.count().toInt

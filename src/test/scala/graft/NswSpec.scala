@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Nsw, SimilaritySearch}
+import graft.operators.{KeyedRows, Nsw, SimilaritySearch}
 
 /** Partition-local NSW graph index: exactness invariant, approximate-mode
   * recall, batch scatter-gather shape, determinism.
@@ -102,10 +102,29 @@ class NswSpec extends SparkSpec {
     }
   }
 
+  /** The fixture as the keyed artifact's input: zero-padded string keys
+    * (string order = id order), empty metadata, the id as version.
+    */
+  private def keyed(df: org.apache.spark.sql.DataFrame) = df.select(
+    format_string("%06d", col("vec_id")).as("key"), col("embedding"),
+    typedLit(Map.empty[String, String]).as("metadata"), col("vec_id").as("ts"))
+
+  /** Serve `qs` from a keyed artifact through the load-once pair: the
+    * whole beam per graph, cut to each query's top k in Spark's (score,
+    * key) order — (query_id, id, score) sorted.
+    */
+  private def servedKeyed(dir: String, qs: Seq[(Long, Array[Double])], k: Int,
+      efSearch: Int): Seq[(Long, Long, Double)] =
+    Nsw.searchLoaded(Nsw.loadIndexKeyed(spark, dir, "key"), qs, k, efSearch)
+      .groupBy(_._1).toSeq.flatMap { case (qid, beam) =>
+        beam.map(c => (c._4, c._2)).sorted(KeyedRows.ScoreKeyOrder).take(k)
+          .map { case (score, key) => (qid, key.toLong, score) }
+      }.sorted
+
   test("persisted index serves identically to the live build (approx + exact)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-nswidx-").toString
     val emb0 = spark.read.parquet(s"$sf0001/embeddings.parquet")
-    Nsw.buildIndex(emb0, "vec_id", "embedding", dir,
+    Nsw.buildIndexKeyed(keyed(emb0), "key", "embedding", dir,
       m = 8, efConstruction = 32, numPartitions = 4)
     val qs = Seq(0L, 7L, 23L).map { qid =>
       val v = emb0.where(col("vec_id") === qid)
@@ -115,14 +134,13 @@ class NswSpec extends SparkSpec {
     }
     // the live form over the SAME (pinned) placement/params builds the
     // SAME graphs, so approximate-mode results must coincide exactly
-    def live(ef: Int) = Nsw.nswTopKBatch(
-        emb0, "vec_id", "embedding",
+    def live(ef: Int) = Nsw.nswTopKBatchKeyed(
+        keyed(emb0), "key", "embedding",
         qs, k = 5, m = 8, efConstruction = 32, efSearch = ef,
         numPartitions = Some(4))
-      .as[(Long, Long, Double)].collect().toSeq.sorted
-    def served(ef: Int) = Nsw.searchIndex(spark, dir, "vec_id", qs,
-        k = 5, efSearch = ef)
-      .as[(Long, Long, Double)].collect().toSeq.sorted
+      .as[(Long, String, Double)].collect().toSeq
+      .map(r => (r._1, r._2.toLong, r._3)).sorted
+    def served(ef: Int) = servedKeyed(dir, qs, k = 5, efSearch = ef)
     assert(served(48) === live(48))          // approximate beam
     assert(served(1 << 20) === live(1 << 20)) // exhaustive (exact)
     // and the exact mode really is exact
@@ -136,11 +154,11 @@ class NswSpec extends SparkSpec {
     val b = emb0.where(col("vec_id") % 3 === 0)
     val dirAll = java.nio.file.Files.createTempDirectory("graft-nsw-all-").toString
     val dirInc = java.nio.file.Files.createTempDirectory("graft-nsw-inc-").toString
-    Nsw.buildIndex(emb0, "vec_id", "embedding", dirAll,
+    Nsw.buildIndexKeyed(keyed(emb0), "key", "embedding", dirAll,
       m = 6, efConstruction = 24, numPartitions = 4)
-    Nsw.buildIndex(a, "vec_id", "embedding", dirInc,
+    Nsw.buildIndexKeyed(keyed(a), "key", "embedding", dirInc,
       m = 6, efConstruction = 24, numPartitions = 4)
-    Nsw.appendToIndex(b, "vec_id", "embedding", dirInc)
+    Nsw.appendToIndexKeyed(keyed(b), "key", "embedding", dirInc)
     val qs = Seq(0L, 7L, 23L).map { qid =>
       (qid, emb0.where(col("vec_id") === qid)
         .select(col("embedding").cast("array<double>"))
@@ -148,15 +166,13 @@ class NswSpec extends SparkSpec {
     }
     // graph SHAPES differ (insertion order differs) but a full-width beam
     // is exhaustive per partition, so the searches must agree exactly
-    def served(dir: String) = Nsw.searchIndex(spark, dir, "vec_id", qs,
-        k = 5, efSearch = 1 << 20)
-      .as[(Long, Long, Double)].collect().toSeq.sorted
+    def served(dir: String) = servedKeyed(dir, qs, k = 5, efSearch = 1 << 20)
     assert(served(dirInc) === served(dirAll))
     // appended rows landed on the partition the from-scratch build chose:
     // same rows per pid in both artifacts
     val perPid = (dir: String) => spark.read.parquet(dir)
-      .select(col("pid").cast("int"), col("vec_id").cast("long"))
-      .as[(Int, Long)].collect().toSet
+      .select(col("pid").cast("int"), col("key"))
+      .as[(Int, String)].collect().toSet
     assert(perPid(dirInc) === perPid(dirAll))
   }
 

@@ -95,6 +95,32 @@ class PqSpec extends SparkSpec {
     assert(a === b)
   }
 
+  test("adcScore and held top keys are bit-identical to adcScores and its root top-n") {
+    val rnd = new scala.util.Random(23)
+    // 60 keys on 15 distinct vectors: ADC ties, decided by the key
+    val rows = (0 until 60).map { i =>
+      val r = new scala.util.Random(i % 15)
+      (f"key$i%03d", Array.fill(8)(r.nextGaussian()))
+    }
+    val df = rows.toDF("key", "vector")
+    val cb = Pq.trainCodebooks(df, "vector", numSub = 4, numWords = 4, seed = 5L)
+    val encoded = Pq.encode(df, "key", "vector", cb).repartition(3)
+    val q = Array.fill(8)(rnd.nextGaussian())
+    val sqlScores = Pq.adcScores(encoded, "key", cb, q)
+      .as[(String, Double)].collect().toMap
+    val table = Pq.adcTable(cb, q)
+    encoded.as[(String, Array[Int])].collect().foreach { case (k, codes) =>
+      assert(Pq.adcScore(table, codes) === sqlScores(k), k)
+    }
+    val held = Pq.loadHeldCodes(encoded, "key")
+    Seq(1, 9, 60).foreach { n =>
+      val sql = Pq.adcScores(encoded, "key", cb, q)
+        .orderBy(col("score"), col("key")).limit(n)
+        .collect().map(_.getString(0)).toSeq
+      assert(Pq.heldAdcTopKeys(held, cb, q, n).toSeq === sql, s"n=$n")
+    }
+  }
+
   test("deterministicCodebooks rejects duplicate / non-contiguous id sets") {
     // duplicate id below numWords: row count matches but the mapping would
     // silently misalign — must throw

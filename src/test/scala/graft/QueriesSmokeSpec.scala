@@ -20,6 +20,17 @@ class QueriesSmokeSpec extends SparkSpec {
     }
   }
 
+  test("q17, q70 and q107 leave no persisted block behind") {
+    // compared by id: an earlier suite's unreferenced block may be
+    // dropped by the ContextCleaner mid-test
+    Seq("q17_minhash_lsh_dedup", "q70_pagerank", "q107_store_bq_serve").foreach { q =>
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      assert(SparkEntry.queries(q)(spark, sf0001).collect().nonEmpty, q)
+      val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"$q left persisted RDDs $left")
+    }
+  }
+
   test("entry returns rows on sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

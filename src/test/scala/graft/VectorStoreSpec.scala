@@ -33,8 +33,9 @@ class VectorStoreSpec extends SparkSpec {
 
   private lazy val probe = Probe.Listener.attach(spark)
 
-  // A handle that served searchNsw holds its graphs in a persisted RDD
-  // until closed, so every test that serves NSW opens its handles through
+  // A handle that served searchNsw, or searchPq/searchBq on a fresh index,
+  // holds that tier's rows in a persisted RDD until closed, so every test
+  // that serves NSW, or PQ/BQ on a fresh handle, opens its handles through
   // `Using` and leaves no block behind in the shared session.
 
   /** The executed plans of every SQL execution `run` starts, and its
@@ -385,63 +386,79 @@ class VectorStoreSpec extends SparkSpec {
 
   test("IVF/BQ/PQ fresh-index fast path: no window or liveness semi-join, " +
       "parity with the full discipline") {
-    val dir = tmpDir()
-    val store = new VectorStore(spark, dir, dim = 2)
-    store.put(batch((0 until 12).map(i =>
-      rec(f"k$i%02d", Array(i.toFloat, (i % 3).toFloat), 10, tag = s"t${i % 2}")): _*))
-    store.compact() // steady state: the live table is a snapshot scan
-    store.buildIvfIndex(k = 2)
-    store.buildBqIndex()
-    store.buildPqIndex(numSub = 2, numWords = 4)
-    val req = Knn.SearchRequest(Array(2.0, 1.0), topK = 3)
-    // every SQL execution of each call: PQ/BQ run phase 1 inside the call
-    def serve(s: VectorStore): Seq[(String, (String, Seq[(String, Double)]))] = Seq(
-      "ivf" -> served(s.searchIvf(req, nprobe = 2)),
-      "bq" -> served(s.searchBq(req, rerankFrom = 12)),
-      "pq" -> served(s.searchPq(req, rerankFrom = 12)))
-    // fresh builds: every key indexed once and live, so neither the
-    // newest-version window nor the (key, ts) semi-join is in the plan
-    val fresh = serve(store)
-    fresh.foreach { case (t, (p, _)) =>
-      assert(!p.contains("Window") && !p.contains("LeftSemi"), s"$t: $p")
-    }
-    // a filtered PQ request keeps its pre-rank semi-join even when fresh
-    val (filteredPlan, filtered) =
-      served(store.searchPq(req.copy(filter = Map("tag" -> "t0")), rerankFrom = 12))
-    assert(filteredPlan.contains("LeftSemi"), filteredPlan)
-    assert(filtered === pairs(store.search(req.copy(filter = Map("tag" -> "t0")))))
-    // cold reopen: freshness is driver state, so the full discipline runs
-    // and must give the same answers
-    val reopened = serve(new VectorStore(spark, dir, dim = 2))
-    fresh.zip(reopened).foreach { case ((t, (_, a)), (_, (p, b))) =>
-      assert(p.contains("LeftSemi") && (t == "pq" || p.contains("Window")), s"$t: $p")
-      assert(a === b, t)
-      assert(a === pairs(store.search(req)), t)
-    }
-    // any store write invalidates every tier's fast path
-    store.put(batch(rec("k00", Array(9f, 9f), 20)))
-    serve(store).foreach { case (t, (p, _)) =>
-      assert(p.contains("LeftSemi"), s"$t: $p")
-    }
+    Using.Manager { use =>
+      val dir = tmpDir()
+      val store = use(new VectorStore(spark, dir, dim = 2))
+      // 12 distinct vectors, and three more keys on k04's vector: they tie
+      // k04 on every first-pass and exact score, so the key decides
+      store.put(batch(((0 until 12).map(i =>
+          rec(f"k$i%02d", Array(i.toFloat, (i % 3).toFloat), 10, tag = s"t${i % 2}")) ++
+        Seq("j04", "k04a", "k04b").map(k => rec(k, Array(4f, 1f), 10, tag = "t0"))): _*))
+      store.compact() // steady state: the live table is a snapshot scan
+      store.buildIvfIndex(k = 2)
+      store.buildBqIndex()
+      store.buildPqIndex(numSub = 2, numWords = 4)
+      // top 5 = k01, k02, k03, then j04 and k04 out of the four-way tie
+      val req = Knn.SearchRequest(Array(2.0, 1.0), topK = 5)
+      val tagged = req.copy(filter = Map("tag" -> "t0"))
+      // every SQL execution of each call: PQ/BQ run phase 1 inside the
+      // call. rerankFrom = 15 covers the corpus (exact answers); 5 cuts
+      // the first pass inside its ties
+      def serve(s: VectorStore): Seq[(String, (String, Seq[(String, Double)]))] = Seq(
+        "ivf" -> served(s.searchIvf(req, nprobe = 2)),
+        "bq" -> served(s.searchBq(req, rerankFrom = 15)),
+        "pq" -> served(s.searchPq(req, rerankFrom = 15)),
+        "bq cut" -> served(s.searchBq(req, rerankFrom = 5)),
+        "pq cut" -> served(s.searchPq(req, rerankFrom = 5)),
+        "bq filtered" -> served(s.searchBq(tagged, rerankFrom = 5)))
+      // fresh builds: every key indexed once and live, so neither the
+      // newest-version window nor the (key, ts) semi-join is in the plan
+      val fresh = serve(store)
+      fresh.foreach { case (t, (p, _)) =>
+        assert(!p.contains("Window") && !p.contains("LeftSemi"), s"$t: $p")
+      }
+      val exact = pairs(store.search(req))
+      assert(exact.map(_._1) === Seq("k01", "k02", "k03", "j04", "k04"))
+      // a filtered PQ request keeps its pre-rank semi-join even when fresh
+      val (filteredPlan, filtered) = served(store.searchPq(tagged, rerankFrom = 15))
+      assert(filteredPlan.contains("LeftSemi"), filteredPlan)
+      assert(filtered === pairs(store.search(tagged)))
+      assert(pairs(store.searchBq(tagged, rerankFrom = 15)) === filtered)
+      // cold reopen: freshness is driver state, so the full discipline runs
+      // and must give the same answers, ties included
+      val reopened = serve(use(new VectorStore(spark, dir, dim = 2)))
+      fresh.zip(reopened).foreach { case ((t, (_, a)), (_, (p, b))) =>
+        assert(p.contains("LeftSemi") && (t.startsWith("pq") || p.contains("Window")),
+          s"$t: $p")
+        assert(a === b, t)
+        if (!t.contains(" ")) assert(a === exact, t)
+      }
+      // any store write invalidates every tier's fast path
+      store.put(batch(rec("k00", Array(9f, 9f), 20)))
+      serve(store).foreach { case (t, (p, _)) =>
+        assert(p.contains("LeftSemi"), s"$t: $p")
+      }
+    }.get
   }
 
   test("a delete after an IVF or BQ build, with no append, is never served") {
-    val store = new VectorStore(spark, tmpDir(), dim = 2)
-    store.put(batch((0 until 6).map(i =>
-      rec(s"k$i", Array(i.toFloat, 1f), 10)): _*))
-    store.buildIvfIndex(k = 2)
-    store.buildBqIndex()
-    val req = Knn.SearchRequest(Array(0.0, 1.0), topK = 6)
-    def ivf = pairs(store.searchIvf(req, nprobe = 2))
-    def bq = pairs(store.searchBq(req, rerankFrom = 6))
-    assert(ivf.map(_._1).contains("k0") && bq.map(_._1).contains("k0"))
-    // the delete bumps the store's seq, so both tiers leave the fast path
-    // without any index write
-    store.delete(Seq("k0"), ts = 20)
-    val exact = pairs(store.search(req))
-    assert(!exact.map(_._1).contains("k0"))
-    assert(ivf === exact)
-    assert(bq === exact)
+    Using.resource(new VectorStore(spark, tmpDir(), dim = 2)) { store =>
+      store.put(batch((0 until 6).map(i =>
+        rec(s"k$i", Array(i.toFloat, 1f), 10)): _*))
+      store.buildIvfIndex(k = 2)
+      store.buildBqIndex()
+      val req = Knn.SearchRequest(Array(0.0, 1.0), topK = 6)
+      def ivf = pairs(store.searchIvf(req, nprobe = 2))
+      def bq = pairs(store.searchBq(req, rerankFrom = 6))
+      assert(ivf.map(_._1).contains("k0") && bq.map(_._1).contains("k0"))
+      // the delete bumps the store's seq, so both tiers leave the fast
+      // path without any index write
+      store.delete(Seq("k0"), ts = 20)
+      val exact = pairs(store.search(req))
+      assert(!exact.map(_._1).contains("k0"))
+      assert(ivf === exact)
+      assert(bq === exact)
+    }
   }
 
   test("after compact, the live table is the snapshot alone and equals the " +
@@ -610,7 +627,7 @@ class VectorStoreSpec extends SparkSpec {
   }
 
   test("PQ index artifact: ADC candidates re-ranked exactly, full request honored") {
-    val store = new VectorStore(spark, tmpDir(), dim = 4)
+    Using.resource(new VectorStore(spark, tmpDir(), dim = 4)) { store =>
     store.put(batch(
       ("q", Array(0f, 0f, 0f, 0f), Map("tag" -> "keep"), 10L),
       ("near", Array(0.1f, 0f, 0f, 0f), Map("tag" -> "keep"), 10L),
@@ -631,6 +648,7 @@ class VectorStoreSpec extends SparkSpec {
         topK = 2, filter = Map("tag" -> "keep")), rerankFrom = 2)
       .collect().map(_.getString(0))
     assert(tight === Array("q", "near"))
+    }
   }
 
   test("PQ search after deletes: stale codes don't consume the candidate budget") {
@@ -731,7 +749,7 @@ class VectorStoreSpec extends SparkSpec {
   }
 
   test("BQ index artifact: full-overfetch equals exact; request surface honored") {
-    val store = new VectorStore(spark, tmpDir(), dim = 2)
+    Using.resource(new VectorStore(spark, tmpDir(), dim = 2)) { store =>
     store.put(batch(
       rec("near", Array(0.5f, 1f), 10, tag = "keep"),
       rec("mid", Array(0.5f, 3f), 10, tag = "keep"),
@@ -753,6 +771,7 @@ class VectorStoreSpec extends SparkSpec {
       store.searchBq(Knn.SearchRequest(Array(1.0), topK = 1))
     }
     assert(e.getMessage.contains("dim"))
+    }
   }
 
   test("BQ append + LWW + soft-delete: stale packed rows never served") {
@@ -896,8 +915,9 @@ class VectorStoreSpec extends SparkSpec {
 
   test("steady-state searchIvf is one job and searchPq two; a cold handle " +
       "loads the trained artifact once") {
+    Using.Manager { use =>
     val dir = tmpDir()
-    val store = new VectorStore(spark, dir, dim = 2)
+    val store = use(new VectorStore(spark, dir, dim = 2))
     store.put(batch((0 until 24).map(i =>
       rec(f"k$i%02d", Array((i % 6).toFloat, (i / 6).toFloat), 10)): _*))
     store.compact()
@@ -912,7 +932,7 @@ class VectorStoreSpec extends SparkSpec {
     assert(ivf.value.map(r => (r.getString(0), r.getDouble(1))).toSeq === exact)
     assert(pq.value.map(r => (r.getString(0), r.getDouble(1))).toSeq === exact)
     // a second handle pays one load job on its first call only
-    val cold = new VectorStore(spark, dir, dim = 2)
+    val cold = use(new VectorStore(spark, dir, dim = 2))
     Seq[VectorStore => DataFrame](_.searchIvf(req, nprobe = 3),
         _.searchPq(req, rerankFrom = 24)).foreach { run =>
       val first = probe.measure(run(cold).collect())
@@ -920,12 +940,14 @@ class VectorStoreSpec extends SparkSpec {
       assert(first.totals.jobs === second.totals.jobs + 1, (first.totals, second.totals))
       assert(pairs(run(cold)) === exact)
     }
+    }.get
   }
 
   test("a rebuild is served with the new centroids and codebooks, through " +
       "the same handle and through a second one") {
+    Using.Manager { use =>
     val dir = tmpDir()
-    val a = new VectorStore(spark, dir, dim = 2)
+    val a = use(new VectorStore(spark, dir, dim = 2))
     // three far-apart clusters of 6 keys
     val centres = Seq((0f, 0f), (100f, 0f), (0f, 100f))
     a.put(batch((for { (c, ci) <- centres.zipWithIndex; j <- 0 until 6 }
@@ -935,7 +957,7 @@ class VectorStoreSpec extends SparkSpec {
       Knn.SearchRequest(Array(x + 1.0, y + 0.5), topK = 3) }
     val exact = queries.map(q => pairs(a.search(q)))
     def ivf(s: VectorStore) = queries.map(q => pairs(s.searchIvf(q, nprobe = 1)))
-    val b = new VectorStore(spark, dir, dim = 2)
+    val b = use(new VectorStore(spark, dir, dim = 2))
     // three cells: each query's own cluster is its one probed cell
     a.buildIvfIndex(k = 3)
     assert(ivf(a) === exact && ivf(b) === exact)
@@ -969,6 +991,7 @@ class VectorStoreSpec extends SparkSpec {
     assert(pq(a) === pqExpected && pq(b) === pqExpected)
     a.buildPqIndex(numSub = 2, numWords = 2, seed = 7L)
     assert(pq(b) === pqExpected && pq(a) === pqExpected)
+    }.get
   }
 
   test("steady-state searchNsw is one job with no shuffle; searchPq and " +
@@ -992,19 +1015,23 @@ class VectorStoreSpec extends SparkSpec {
           "searchPq" -> (() => store.searchPq(req, rerankFrom = 24)),
           "searchBq" -> (() => store.searchBq(req, rerankFrom = 24))).foreach {
         case (name, run) =>
+          run().collect() // the first call loads the held block
           val m = probe.measure(pairs(run()))
           assert(m.totals.jobs === 2L, s"$name: ${m.totals}")
-          assert(m.plans.length === 2, name)
-          m.plans.map(_.executedPlan.toString).foreach { p =>
-            assert(!p.contains("Exchange"), s"$name: $p")
-          }
+          assert(m.totals.shuffleReadBytes === 0L && m.totals.shuffleWriteBytes === 0L,
+            s"$name: ${m.totals}")
+          // phase 1 ranks the held block in a plain RDD job, so it starts
+          // no SQL execution: the one plan is phase 2's re-rank
+          assert(m.plans.length === 1, name)
+          val rerank = m.plans.head.executedPlan.toString
+          assert(!rerank.contains("Exchange"), s"$name: $rerank")
           assert(m.value === exact, name)
       }
     }
   }
 
-  test("the handle owns one persisted block of NSW graphs: loaded once, " +
-      "replaced by a rebuild, freed by close") {
+  test("the handle owns three persisted blocks, NSW graphs, PQ codes and " +
+      "BQ packs: loaded once, a rebuild frees only its own, close frees all") {
     // counted against the blocks alive at the start, by id: earlier
     // suites' unreferenced blocks may be dropped by the ContextCleaner
     // at any GC, so a bare count could fall while this store is correct
@@ -1015,20 +1042,36 @@ class VectorStoreSpec extends SparkSpec {
       store.put(batch((0 until 12).map(i =>
         rec(f"k$i%02d", Array(i.toFloat, (i % 3).toFloat), 10)): _*))
       store.buildNswIndex(m = 4, efConstruction = 8, numPartitions = 3)
+      store.buildPqIndex(numSub = 2, numWords = 4)
+      store.buildBqIndex()
       val req = Knn.SearchRequest(Array(2.0, 1.0), topK = 3)
-      assert(pairs(store.searchNsw(req, efSearch = 1 << 20)) === pairs(store.search(req)))
+      val exact = pairs(store.search(req))
+      assert(added.isEmpty)
+      assert(pairs(store.searchNsw(req, efSearch = 1 << 20)) === exact)
+      assert(pairs(store.searchPq(req, rerankFrom = 12)) === exact)
+      assert(pairs(store.searchBq(req, rerankFrom = 12)) === exact)
       val first = added
-      assert(first.size === 1)
-      (1 to 20).foreach(_ => store.searchNsw(req).collect())
+      assert(first.size === 3)
+      (1 to 20).foreach { _ =>
+        store.searchNsw(req).collect()
+        store.searchPq(req).collect()
+        store.searchBq(req).collect()
+      }
       assert(added === first)
-      // a rebuild over a changed corpus frees the old block; the next
-      // search loads the new graphs into one block
+      // a PQ rebuild frees the PQ block alone; the next PQ search loads
+      // the new codes into one new block
+      store.buildPqIndex(numSub = 2, numWords = 4, seed = 7L)
+      val kept = added
+      assert(kept.size === 2 && kept.subsetOf(first))
+      assert(pairs(store.searchPq(req, rerankFrom = 12)) === exact)
+      val second = added
+      assert(second.size === 3 && kept.subsetOf(second) && second != first)
+      // an NSW rebuild over a changed corpus frees the NSW block alone
       store.put(batch(rec("k00", Array(2f, 1f), 20)))
       store.buildNswIndex(m = 4, efConstruction = 8, numPartitions = 3)
-      assert(added.isEmpty)
+      assert(added.size === 2 && added.subsetOf(second))
       assert(pairs(store.searchNsw(req, efSearch = 1 << 20)) === pairs(store.search(req)))
-      val second = added
-      assert(second.size === 1 && second != first)
+      assert(added.size === 3)
     } finally store.close()
     assert(added.isEmpty)
   }
@@ -1063,5 +1106,60 @@ class VectorStoreSpec extends SparkSpec {
       assert(second.size === 1 && second.keySet != first.keySet)
     }.get
     assert((persisted -- base).isEmpty)
+  }
+
+  test("a second handle serves a BQ rebuild made through the first") {
+    val dir = tmpDir()
+    def persisted = spark.sparkContext.getPersistentRDDs
+    val base = persisted.keySet
+    Using.Manager { use =>
+      val a = use(new VectorStore(spark, dir, dim = 2))
+      val b = use(new VectorStore(spark, dir, dim = 2))
+      a.put(batch((0 until 12).map(i =>
+        rec(f"k$i%02d", Array(i.toFloat, (i % 3).toFloat), 10)): _*))
+      // b builds, so its index is fresh and it ranks a held block
+      b.buildBqIndex()
+      val req = Knn.SearchRequest(Array(2.0, -1.0), topK = 3)
+      val before = pairs(a.search(req))
+      assert(pairs(b.searchBq(req, rerankFrom = 12)) === before)
+      // b's block, referenced here so that only b can free it
+      val first = persisted -- base
+      assert(first.size === 1)
+      // k00 moves onto the query and its sign bits change (00 -> 01, the
+      // query's): with b's old packs its Hamming rank would still lose
+      // the one-candidate first pass to k03
+      a.put(batch(rec("k00", Array(2f, -1f), 20)))
+      a.buildBqIndex()
+      val after = pairs(a.search(req))
+      assert(after.head === (("k00", 0.0)))
+      assert(after !== before)
+      assert(pairs(b.searchBq(req.copy(topK = 1), rerankFrom = 1)) === after.take(1))
+      assert(pairs(b.searchBq(req, rerankFrom = 12)) === after)
+      // b replaced its block instead of adding one
+      val second = persisted -- base
+      assert(second.size === 1 && second.keySet != first.keySet)
+    }.get
+    assert((persisted -- base).isEmpty)
+  }
+
+  test("a compact through a second handle is read at once by the first's get") {
+    val dir = tmpDir()
+    val a = new VectorStore(spark, dir, dim = 2)
+    a.put(batch(rec("a", Array(1f, 1f), 10), rec("b", Array(2f, 2f), 10)))
+    a.compact()
+    // while no write follows the snapshot, every read plans over one
+    // held relation
+    assert(a.scan eq a.scan)
+    assert(a.get("a").select("vector").head().getSeq[Double](0) === Seq(1.0, 1.0))
+    val b = new VectorStore(spark, dir, dim = 2)
+    b.put(batch(rec("a", Array(7f, 7f), 20)))
+    b.delete(Seq("b"), ts = 30)
+    b.compact()
+    // a's next read resolves b's new snapshot: no window, new state
+    assert(!planOf(a.get("a")).contains("Window"), planOf(a.get("a")))
+    assert(a.get("a").select("vector").head().getSeq[Double](0) === Seq(7.0, 7.0))
+    assert(a.get("b").count() === 0)
+    assert(a.scan eq a.scan)
+    assert(records(a.scan) === records(b.scan))
   }
 }

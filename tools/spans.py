@@ -8,14 +8,18 @@ PATH defaults to .bench_build/work/<workload>/spans.jsonl under the
 repository root: the file `perfbench/run.py --workload <workload>
 --trace 1` writes, one JSON span per line. For each call kind
 (`layer.name`) and phase (setup, warmup, loop, after) it prints the
-number of spans and the median wall time, jobs, stages, tasks, shuffle
-bytes and input bytes, as a table or, with --json, as one JSON object.
-`shuffle_bytes` is the shuffle write side, the figure the benchmark
-reports as `store.<call>.shuffle_bytes`.
+number of spans and the median wall time, task time, jobs, stages,
+tasks, shuffle bytes and input bytes, as a table or, with --json, as one
+JSON object. `task_ms` is the executor run time summed over the span's
+tasks, next to the wall time `p50_ms`: on a call whose tasks run one
+after another or in parallel on few cores, the gap between the two is
+the time no task accounts for (driver-side analysis, planning,
+scheduling and result handling). `shuffle_bytes` is the shuffle write
+side, the figure the benchmark reports as `store.<call>.shuffle_bytes`.
 
 With two paths, A (say the parent's run) and B (the change's), it prints
 one row per call kind and phase found in either run: span counts and
-the median ms, jobs and shuffle bytes as `A -> B`, the before/after
+the median ms, task ms, jobs and shuffle bytes as `A -> B`, the before/after
 table of a performance change in one command.
 """
 import argparse
@@ -26,10 +30,10 @@ import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PHASES = ["setup", "warmup", "loop", "after"]
-FIELDS = [("p50_ms", None), ("jobs", "jobs"), ("stages", "stages"),
+FIELDS = [("p50_ms", None), ("task_ms", "task_ms"), ("jobs", "jobs"), ("stages", "stages"),
           ("tasks", "tasks"), ("shuffle_bytes", "shuffle_write_bytes"),
           ("input_bytes", "input_bytes")]
-COMPARED = ["n", "p50_ms", "jobs", "shuffle_bytes"]
+COMPARED = ["n", "p50_ms", "task_ms", "jobs", "shuffle_bytes"]
 
 
 def load(path):
@@ -78,7 +82,8 @@ def num(v):
 def compare_table(rows):
     def pair(f, ab):
         return " -> ".join("-" if v is None else
-                           f"{v:.0f}" if f == "p50_ms" else num(v) for v in ab)
+                           f"{v:.0f}" if f in ("p50_ms", "task_ms") else num(v)
+                           for v in ab)
     head = ["call", "phase"] + COMPARED
     cells = [[r["call"], r["phase"]] + [pair(f, r[f]) for f in COMPARED] for r in rows]
     return grid(head, cells)
@@ -95,8 +100,9 @@ def grid(head, cells):
 
 def table(rows):
     head = ["call", "phase", "n"] + [name for name, _ in FIELDS]
-    cells = [[r["call"], r["phase"], str(r["n"]), f"{r['p50_ms']:.0f}"] +
-             [num(r[name]) for name, _ in FIELDS[1:]] for r in rows]
+    cells = [[r["call"], r["phase"], str(r["n"]), f"{r['p50_ms']:.0f}",
+              f"{r['task_ms']:.0f}"] +
+             [num(r[name]) for name, _ in FIELDS[2:]] for r in rows]
     return grid(head, cells)
 
 
