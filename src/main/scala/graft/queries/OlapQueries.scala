@@ -178,8 +178,7 @@ object OlapQueries {
         // limit) are collected first, then the block is freed, and the
         // answer escapes as a driver-side local relation
         val top = ranks.orderBy(col("rank").desc, col("id").asc).limit(20)
-        val rows = top.collect()
-        Graph.freeMaterialized(ranks)
+        val rows = try top.collect() finally Graph.freeMaterialized(ranks)
         s.createDataFrame(java.util.Arrays.asList(rows: _*), top.schema)
       },
       Some("""WITH sp AS (SELECT DISTINCT l_suppkey AS a, l_partkey + 1000000 AS b FROM lineitem),

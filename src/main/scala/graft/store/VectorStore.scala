@@ -652,8 +652,7 @@ class VectorStore(spark: SparkSession, baseDir: String, dim: Int = Constants.Dim
     * cluster scans while full vectors stay on disk for the re-rank only
     * (SCALE.md "PQ / ADC"). Encode is the write-side cost, like IVF
     * assignment. The codebooks are trained on the driver from one bounded
-    * sample ([[Pq.trainCodebooks]]) and kept on this
-    * handle.
+    * sample ([[Pq.trainCodebooks]]) and kept on this handle.
     */
   def buildPqIndex(numSub: Int = 8, numWords: Int = 16, seed: Long = 42L): Unit = {
     pqCodes.release()
